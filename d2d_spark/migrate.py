@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from d2d_spark.operators.join import dedup_build_side, key_merge
 from d2d_spark.sources.base import Sink, Source
@@ -47,6 +48,31 @@ def _infer_transform_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str
         )
     schema = df.sparkSession.createDataFrame(pd.DataFrame(transformed)).schema
     return schema, [f.name for f in schema.fields]
+
+
+def _integral_cols(df: DataFrame) -> frozenset[str]:
+    return frozenset(f.name for f in df.schema.fields if isinstance(f.dataType, T.IntegralType))
+
+
+def _row_dicts(pdf: pd.DataFrame, integral: frozenset[str]) -> list[dict]:
+    """``pdf``'s rows as dicts holding the values the driver-side
+    sample hands ``format_data`` (``Row.asDict``). Arrow delivers SQL
+    NULL as NaN/NaT and a nullable integral column as float64, so each
+    column that holds a NULL in this batch is rebuilt as Python
+    objects: None for NULL, ``int`` for integral columns. A float
+    column's NaN cannot be told from NULL here and becomes None too.
+    Null-free columns pass through untouched."""
+    for c in pdf.columns:
+        s = pdf[c]
+        if not s.hasnans:
+            continue
+        null = s.isna()
+        if c in integral:
+            vals = [None if n else int(v) for v, n in zip(s.to_numpy(), null.to_numpy())]
+            pdf[c] = pd.Series(vals, index=pdf.index, dtype="object")
+        else:
+            pdf[c] = s.astype("object").where(~null, None)
+    return pdf.to_dict("records")
 
 
 def apply_format_data(
@@ -81,11 +107,12 @@ def apply_format_data(
         return out
 
     schema, cols = _infer_transform_schema(df, fn, sample, on_error)
+    integral = _integral_cols(df)
 
     def run(batches):
         for pdf in batches:
             out = []
-            for rec in pdf.to_dict("records"):
+            for rec in _row_dicts(pdf, integral):
                 try:
                     t = fn(rec)
                 except Exception as e:
@@ -132,9 +159,8 @@ def format_data_with_quarantine(
     """
     import json
 
-    from pyspark.sql import types as T
-
     schema, cols = _infer_transform_schema(df, fn, sample, on_error="skip")
+    integral = _integral_cols(df)
     wide_schema = T.StructType(
         list(schema.fields)
         + [T.StructField("__row", T.StringType()), T.StructField("__error", T.StringType())]
@@ -145,7 +171,7 @@ def format_data_with_quarantine(
         yielded = False
         for pdf in batches:
             good, bad = [], []
-            for rec in pdf.to_dict("records"):
+            for rec in _row_dicts(pdf, integral):
                 try:
                     t = fn(rec)
                 except Exception as e:

@@ -184,9 +184,22 @@ def gap_fill(
         .agg(F.count(F.lit(1)).alias("__n"))
         .agg(F.max("__n").alias("dup"))
     )
+    # Both joins below are null-safe on the keys: a NULL key is a group
+    # of its own (groupBy keeps it and the grid is built for it), and a
+    # plain equi-join would drop it from the grid-bomb and stray checks
+    # and report its observed buckets as gaps. The right side's keys
+    # are renamed __g<i> so the output keeps one copy of each key.
+    def on_keys(left: DataFrame, right: DataFrame) -> Column:
+        cond = F.lit(True)
+        for i, k in enumerate(keys):
+            cond = cond & left[k].eqNullSafe(right[f"__g{i}"])
+        return cond
+
+    renamed = [F.col(k).alias(f"__g{i}") for i, k in enumerate(keys)]
+    obs = buckets.select(*keys, F.col(bucket_col).alias("__b"))
+    rng = guard.select(*renamed, "__lo", "__hi", "__nb")
     sw_agg = (
-        buckets.select(*keys, F.col(bucket_col).alias("__b"))
-        .join(guard.select(*keys, "__lo", "__hi", "__nb"), keys)
+        obs.join(rng, on_keys(obs, rng))
         .agg(
             F.max("__nb").alias("max_nb"),
             F.max(stray_cond).alias("stray"),
@@ -220,8 +233,11 @@ def gap_fill(
         *keys,
         F.explode(F.sequence(F.col("__lo"), F.col("__hi"), iv)).alias(bucket_col),
     )
+    present = buckets.select(
+        *renamed, F.col(bucket_col).alias("__gb"), *vals, F.lit(True).alias("__present")
+    )
     joined = grid.join(
-        buckets.withColumn("__present", F.lit(True)), keys + [bucket_col], "left"
+        present, on_keys(grid, present) & (grid[bucket_col] == present["__gb"]), "left"
     )
     out_vals: list[Column] = []
     for c in vals:

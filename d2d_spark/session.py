@@ -10,10 +10,86 @@ timezone-stable across engines (the DuckDB oracle runs in UTC).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+_MIB = 1 << 20
+_GIB = 1 << 30
+# cgroup v1 reports "no limit" as LONG_MAX rounded down to a page
+# (9223372036854771712); any value this large means unlimited
+_CGROUP_UNLIMITED = 1 << 62
+
+
+def cgroup_memory_limit(proc_self_cgroup: str, read: Callable[[str], str | None]) -> int | None:
+    """Byte limit of the memory cgroup described by ``proc_self_cgroup``
+    (the text of ``/proc/self/cgroup``), or None when no limit is set.
+
+    Reads v2 ``memory.max`` (the ``0::`` line) and v1
+    ``memory.limit_in_bytes`` (the ``memory`` controller line) through
+    ``read(path) -> text | None``, at the cgroup's own directory and
+    every ancestor up to the mount root: a parent's limit binds the
+    child too, and in a container without a cgroup namespace the
+    listed path does not exist under the mount, whose root is the
+    container's own cgroup. The smallest limit found wins; ``max``
+    and the v1 sentinel count as no limit."""
+    limits = []
+    for line in proc_self_cgroup.splitlines():
+        hier, _, rest = line.partition(":")
+        controllers, _, path = rest.partition(":")
+        if hier == "0" and controllers == "":
+            root, leaf = "/sys/fs/cgroup", "memory.max"
+        elif "memory" in controllers.split(","):
+            root, leaf = "/sys/fs/cgroup/memory", "memory.limit_in_bytes"
+        else:
+            continue
+        parts = [p for p in path.split("/") if p]
+        for depth in range(len(parts), -1, -1):
+            rel = "".join(f"/{p}" for p in parts[:depth])
+            text = read(f"{root}{rel}/{leaf}")
+            if text is None or not text.strip().isdigit():  # missing, or "max"
+                continue
+            if int(text) < _CGROUP_UNLIMITED:
+                limits.append(int(text))
+    return min(limits) if limits else None
+
+
+def driver_memory(ram_bytes: int, cgroup_limit: int | None, override: str | None = None) -> str:
+    """The ``spark.driver.memory`` value: ``override``
+    (``SPARK_GRAFT_DRIVER_MEM``) when set, else a quarter of the
+    memory this process may use — its cgroup limit when one is set
+    and below physical RAM, else RAM — floored at 1 GiB, as ``<n>m``.
+
+    A quarter is the JVM's own container ergonomic (MaxRAMPercentage
+    25). The rest is what lives outside the heap: the Python driver,
+    the pyspark daemon, one Python worker per core and the JVM's
+    off-heap memory (metaspace, code cache, Arrow/Netty buffers).
+    Spark's unified memory is a fraction of the heap, so an input
+    larger than that spills to ``SPARK_LOCAL_DIRS``; a heap sized past
+    the host instead lets G1 grow until the OS refuses the mapping or
+    kills the JVM."""
+    if override:
+        return override
+    budget = min(ram_bytes, cgroup_limit) if cgroup_limit else ram_bytes
+    return f"{max(budget // 4, _GIB) // _MIB}m"
+
+
+def _read_text(path: str) -> str | None:
+    try:
+        with open(path) as f:
+            return f.read()
+    except OSError:
+        return None
+
+
+def _host_driver_memory() -> str:
+    """``driver_memory`` for this process, from its cgroup, the host's
+    physical RAM and ``SPARK_GRAFT_DRIVER_MEM``."""
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    limit = cgroup_memory_limit(_read_text("/proc/self/cgroup") or "", _read_text)
+    return driver_memory(ram, limit, os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
 
 
 def get_spark(
@@ -50,6 +126,12 @@ def get_spark(
         # cached partitions by advisoryPartitionSizeInBytes, which is
         # the same scale-adaptive posture the rest of the engine runs
         # (tiny corpus -> few partitions, 100 TB -> 64 MB partitions).
+        # Audit obligation: a cached frame's partition count now
+        # depends on its bytes, so a float sum over a cached frame can
+        # move in the last ulps with the data size. Any such sum must
+        # pin its partitioning or summation order itself, as
+        # attribution's time_decay (ordered over the full frame) and
+        # stats.binary_auc (explicit repartition) do.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # r11: plan STRINGS are rendered per SQL-listener event (and
@@ -61,7 +143,7 @@ def get_spark(
         # while bounding the pathological case.
         .config("spark.sql.maxPlanStringLength", "8388608")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "90g"))
+        .config("spark.driver.memory", _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config(

@@ -367,3 +367,22 @@ def test_format_data_on_error_validated_for_dict_transforms(spark):
     mem = MemoryConnector({"u": USERS}, spark)
     with pytest.raises(ValueError, match="on_error"):
         apply_format_data(mem.read("u"), {"x": F.col("score")}, on_error="quarantine")
+
+
+def test_format_data_workers_see_driver_values_for_nulls(spark):
+    """Workers must hand format_data what the driver-side sample does
+    (Row.asDict): None for SQL NULL and int for a nullable bigint
+    column, not Arrow's NaN / float64."""
+    from d2d_spark.migrate import format_data_with_quarantine
+
+    df = spark.createDataFrame([(1, 10), (2, None), (3, 30)], "id bigint, qty bigint")
+
+    def fmt(d):
+        return {"id": d["id"], "qty_s": str(d["qty"]), "is_none": d["qty"] is None}
+
+    want = {(1, "10", False), (2, "None", True), (3, "30", False)}
+    out = apply_format_data(df, fmt)
+    assert {(r.id, r.qty_s, r.is_none) for r in out.collect()} == want
+    good, bad = format_data_with_quarantine(df, fmt)
+    assert {(r.id, r.qty_s, r.is_none) for r in good.collect()} == want
+    assert bad.count() == 0

@@ -102,6 +102,22 @@ def test_validation(spark):
         quantiles_exact(df, "x", [0.5], num_partitions=0)
 
 
+def test_bad_num_partitions_raises_before_any_job(spark):
+    """Argument checks precede the persist + eager fill: a frame whose
+    evaluation fails proves no job ran before the ValueError."""
+    from d2d_spark.operators.quantiles import weighted_quantiles_exact
+
+    boom = spark.range(3).select(
+        F.when(F.col("id") >= 0, F.raise_error(F.lit("job ran"))).otherwise(1.0).alias("x"),
+        F.lit(1.0).alias("w"),
+    )
+    for nb in (0, -1):
+        with pytest.raises(ValueError, match="num_partitions must be >= 1"):
+            quantiles_exact(boom, "x", [0.5], num_partitions=nb)
+        with pytest.raises(ValueError, match="num_partitions must be >= 1"):
+            weighted_quantiles_exact(boom, "x", "w", [0.5], num_partitions=nb)
+
+
 def test_winsorize_global_and_grouped(spark, rnd_values):
     from d2d_spark.operators.quantiles import winsorize
 

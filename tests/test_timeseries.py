@@ -90,6 +90,25 @@ def test_gap_fill_guards(spark):
         gap_fill(dup, ["k"], "bucket", "10 minutes", ["s"])
 
 
+def test_gap_fill_guards_cover_null_key(spark):
+    """A NULL key is a group of its own: its grid must face the same
+    max_buckets_per_key and stray-bucket checks as any other key, and
+    its observed buckets must fill from the data."""
+    rows = [(None, T0 + dt.timedelta(hours=h), 1.0) for h in (0, 12)] + [("a", T0, 1.0)]
+    b = spark.createDataFrame(rows, "k string, bucket timestamp, s double")
+    with pytest.raises(ValueError, match="13 grid rows"):
+        gap_fill(b, ["k"], "bucket", "1 hour", ["s"], max_buckets_per_key=5)
+    out = gap_fill(b, ["k"], "bucket", "1 hour", ["s"], fill="zero").collect()
+    nul = sorted((r["bucket"], r["s"], r["gap"]) for r in out if r["k"] is None)
+    assert len(nul) == 13 and sum(not g for _, _, g in nul) == 2
+    assert nul[0] == (T0, 1.0, False) and nul[1][1:] == (0.0, True)
+    stray = b.unionByName(
+        spark.createDataFrame([(None, T0 + dt.timedelta(minutes=90), 1.0)], b.schema)
+    )
+    with pytest.raises(ValueError, match="not on the regular grid"):
+        gap_fill(stray, ["k"], "bucket", "1 hour", ["s"])
+
+
 def test_gap_fill_partial_final_bucket(spark):
     """Explicit range whose span is NOT a multiple of the interval:
     the last partial bucket's row must survive (the advisor's 00:00:09
