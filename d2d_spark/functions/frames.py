@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from typing import Iterable, Sequence
 
+from py4j.protocol import Py4JError
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -47,11 +49,14 @@ def local_frame(
     """A DataFrame over driver-local ``rows`` with ``schema``, built
     from JVM literals (one explode of an array of structs) instead of
     a parallelized-and-pickled Python RDD. Row order is preserved;
-    values are cast to the declared field types exactly as
-    ``createDataFrame`` would coerce them (a value that cannot cast
-    fails loudly under ANSI on both paths). Falls back to
-    ``createDataFrame`` for empty input, oversized row counts, or any
-    value the literal path cannot express."""
+    values are CAST to the declared field types, which for the
+    supported scalar and array values gives what ``createDataFrame``
+    gives. A value that cannot cast still fails loudly under ANSI, but
+    on this path the error comes when the plan runs, not when the
+    frame is built. Falls back to ``createDataFrame`` for empty input,
+    oversized row counts, or a value the literal path cannot express
+    (a type or value error, or one raised from the JVM); any other
+    exception propagates."""
     rows = list(rows)
     st = _schema_of(schema)
     if not rows:
@@ -78,7 +83,7 @@ def local_frame(
             .select(F.explode(F.array(*structs)).alias("__s"))
             .select("__s.*")
         )
-    except Exception:
+    except (TypeError, ValueError, CapturedException, Py4JError):
         # a value F.lit cannot express (or an arity/typing surprise):
         # the slow path is always correct
         return spark.createDataFrame(rows, st)

@@ -9,13 +9,22 @@ diskcache transfer ledger (README.md:470-502), and
 Trigger.AvailableNow turns the watcher into a catch-up batch that
 exits when caught up (the cron-style incremental migration the
 reference left as TODO, README.md:559-560).
+
+Every stateful sink below keeps its cross-batch state in ONE
+`_BatchKeyedState` store (``state_after_batch_N`` per batch, replayed
+from the newest entry with id < N); every foreachBatch sink runs
+through `_run_foreach_batch`.
 """
 
 from __future__ import annotations
 
+import os
+import re
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -90,6 +99,19 @@ def _default_output_mode(df: DataFrame) -> str:
     return "append"
 
 
+def _run_foreach_batch(df: DataFrame, handle, checkpoint_path: str):
+    """One availableNow catch-up pass of ``handle`` over every
+    micro-batch not yet in the checkpoint's ledger."""
+    q = (
+        df.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
+
+
 def sync_with_mode(
     df: DataFrame,
     target_path: str,
@@ -128,14 +150,7 @@ def sync_with_mode(
             partition_by=partition_by,
         )
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def _local_path(p: str) -> str | None:
@@ -152,21 +167,14 @@ def _local_path(p: str) -> str | None:
     return None
 
 
-def _require_local_state_dir(what: str, state_dir: str) -> None:
-    """The stateful sinks manage ``state_dir`` through os-level file
-    APIs (listdir to find the newest state, atomic rename to commit
-    it, rmtree to prune) — semantics with no direct HDFS/S3
-    equivalent, so a non-local path must refuse LOUDLY up front
-    rather than half-work: os.makedirs('s3a://...') would create a
-    literal local directory named 's3a:' and every guard downstream
-    would silently see empty state."""
-    if _local_path(state_dir) is None:
-        raise ValueError(
-            f"{what}: state_dir {state_dir!r} is not a local filesystem "
-            "path — state I/O uses os-level operations (atomic rename for "
-            "crash consistency); point state_dir at node-local or mounted "
-            "storage and sync snapshots to shared storage downstream"
-        )
+def _checkpoint_is_fresh(checkpoint_path: str) -> bool | None:
+    """Whether the checkpoint has never committed a batch (no
+    ``offsets/`` yet); None when it is not on a local filesystem, where
+    the lifetime guards stand down rather than guess."""
+    local = _local_path(checkpoint_path)
+    if local is None:
+        return None
+    return not os.path.isdir(os.path.join(local, "offsets"))
 
 
 def _refuse_fresh_checkpoint_on_used_target(
@@ -176,24 +184,199 @@ def _refuse_fresh_checkpoint_on_used_target(
     the checkpoint, so a deleted/rebuilt checkpoint restarts them at 0
     and would silently overwrite historical ``batch_id=N`` partitions
     while later ones survive — duplicates and lost provenance."""
-    import os
-
-    ckpt_local, target_local = _local_path(checkpoint_path), _local_path(target_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
-    )
+    target_local = _local_path(target_path)
     target_has_batches = (
         target_local is not None
         and os.path.isdir(target_local)
         and any(n.startswith("batch_id=") for n in os.listdir(target_local))
     )
-    if checkpoint_is_fresh and target_has_batches:
+    if _checkpoint_is_fresh(checkpoint_path) and target_has_batches:
         raise ValueError(
             f"{name}: checkpoint {checkpoint_path!r} is fresh but "
             f"target {target_path!r} already holds batch_id= partitions from "
             "a previous checkpoint lifetime. Restarting batch ids at 0 would "
             "silently overwrite historical batches. Use a new target_path, "
             "restore the original checkpoint, or clear the target first."
+        )
+
+
+_STATE_PREFIX = "state_after_batch_"
+
+
+class _BatchKeyedState:
+    """The batch-id-keyed state store behind every stateful sink.
+
+    Batch N commits its state as ``state_after_batch_N`` in
+    ``state_dir``: a directory of named parquet parts, the state frame
+    itself, or (with ``suffix``) one binary file such as the Bloom
+    sink's ``state_after_batch_N.bloom``. Batch N always loads the
+    newest state with id < N, so a replayed batch re-reads its
+    original pre-state and rewrites its own entry with identical
+    content instead of folding into its own output. A commit stages
+    ``<name>.tmp`` and renames it into place, so a crash mid-write
+    leaves no truncated state for the next batch to load.
+    ``keep_last`` prunes older entries after each commit: the
+    full-table CDC/SCD2 snapshots keep two, the newest and its
+    pre-state, which is all a replay can read.
+
+    ``state_dir`` may be a plain path or a ``file:`` URI: os-level
+    calls use the resolved local path, Spark reads and writes the path
+    as given."""
+
+    def __init__(self, state_dir: str, suffix: str = "", keep_last: int | None = None):
+        self._dir = state_dir
+        self._local = _local_path(state_dir)
+        self._suffix = suffix
+        self._keep_last = keep_last
+        self._pat = re.compile(rf"^{_STATE_PREFIX}(\d+){re.escape(suffix)}$")
+
+    @classmethod
+    def for_sink(
+        cls,
+        what: str,
+        state_dir: str,
+        checkpoint_path: str,
+        state_noun: str,
+        lost_consequence: str,
+        suffix: str = "",
+        keep_last: int | None = None,
+    ) -> "_BatchKeyedState":
+        """Open ``state_dir`` for sink ``what``.
+
+        A non-local ``state_dir`` refuses LOUDLY up front: listdir,
+        atomic rename and rmtree have no direct HDFS/S3 equivalent, and
+        os.makedirs('s3a://...') would create a literal local 's3a:'
+        directory behind which every guard silently sees empty state.
+
+        The state and the checkpoint share ONE lifetime: a fresh
+        checkpoint over old state would restart batch ids at 0 and
+        overwrite it, and a resumed checkpoint over a wiped state_dir
+        would silently drop everything processed so far. Both
+        mismatches raise before any query starts."""
+        store = cls(state_dir, suffix, keep_last)
+        if store._local is None:
+            raise ValueError(
+                f"{what}: state_dir {state_dir!r} is not a local filesystem "
+                "path — state I/O uses os-level operations (atomic rename for "
+                "crash consistency); point state_dir at node-local or mounted "
+                "storage and sync snapshots to shared storage downstream"
+            )
+        os.makedirs(store._local, exist_ok=True)
+        fresh, has_state = _checkpoint_is_fresh(checkpoint_path), bool(store.ids())
+        if fresh and has_state:
+            raise ValueError(
+                f"{what}: checkpoint {checkpoint_path!r} is fresh but "
+                f"state_dir {state_dir!r} holds {state_noun} from a previous "
+                "checkpoint lifetime — use a fresh state_dir, or restore "
+                "the original checkpoint."
+            )
+        if fresh is False and not has_state:
+            raise ValueError(
+                f"{what}: checkpoint {checkpoint_path!r} is resuming but "
+                f"state_dir {state_dir!r} has no {state_noun} — "
+                f"{lost_consequence}. Restore the state files or start over "
+                "with a fresh checkpoint."
+            )
+        return store
+
+    def _name(self, batch_id: int) -> str:
+        return f"{_STATE_PREFIX}{batch_id}{self._suffix}"
+
+    def ids(self, below: int | None = None) -> list[int]:
+        """Committed batch ids, ascending (only those < ``below``);
+        empty when the directory is missing — a sink that never ran is
+        an answerable question, not an OSError."""
+        if self._local is None or not os.path.isdir(self._local):
+            return []
+        return sorted(
+            int(m.group(1))
+            for n in os.listdir(self._local)
+            if (m := self._pat.match(n)) and (below is None or int(m.group(1)) < below)
+        )
+
+    def newest(self, below: int | None = None) -> int | None:
+        ids = self.ids(below)
+        return ids[-1] if ids else None
+
+    def path(self, batch_id: int, part: str | None = None, tmp: bool = False) -> str:
+        """Spark-facing path of batch ``batch_id``'s state (its ``part``)."""
+        p = os.path.join(self._dir, self._name(batch_id) + (".tmp" if tmp else ""))
+        return os.path.join(p, part) if part else p
+
+    def read(self, spark: SparkSession, batch_id: int | None, part: str | None = None):
+        """Batch ``batch_id``'s state frame (its ``part``); None for a
+        None id, so ``read(spark, newest(...))`` needs no branch."""
+        if batch_id is None:
+            return None
+        return spark.read.parquet(self.path(batch_id, part))
+
+    def read_bytes(self, batch_id: int | None) -> bytes | None:
+        if batch_id is None:
+            return None
+        with open(os.path.join(self._local, self._name(batch_id)), "rb") as f:
+            return f.read()
+
+    def commit(self, batch_id: int, state) -> None:
+        """Commit batch ``batch_id``'s state: ``bytes`` (one file), a
+        DataFrame, or a dict of named DataFrame parts."""
+        final = os.path.join(self._local, self._name(batch_id))
+        tmp = final + ".tmp"
+        if isinstance(state, bytes):
+            with open(tmp, "wb") as f:
+                f.write(state)
+        else:
+            parts = state.items() if isinstance(state, dict) else [(None, state)]
+            for part, frame in parts:
+                frame.write.mode("overwrite").parquet(self.path(batch_id, part, tmp=True))
+        # replace atomically-enough: a crash between rmtree and rename
+        # loses only state N, which the replayed batch N re-derives
+        # from state N-1
+        if os.path.isdir(final):
+            shutil.rmtree(final)
+        os.replace(tmp, final)
+        if self._keep_last:
+            for old in self.ids()[: -self._keep_last]:
+                shutil.rmtree(os.path.join(self._local, self._name(old)), ignore_errors=True)
+
+
+def _newest_state(spark: SparkSession, state_dir: str):
+    """The newest state frame in a single-frame sink's ``state_dir``
+    (None if missing/empty)."""
+    store = _BatchKeyedState(state_dir)
+    return store.read(spark, store.newest())
+
+
+def _points_and_carry(spark: SparkSession, state_dir: str):
+    """(points, carry) from a carry sink's state dir: points = the
+    union of every batch's emitted rows (replays overwrite their own
+    batch entry, so the union is consistent), carry = the newest
+    per-key running state; (None, None) if missing/empty."""
+    store = _BatchKeyedState(state_dir)
+    ids = store.ids()
+    if not ids:
+        return None, None
+    points = spark.read.parquet(*[store.path(i, "points") for i in ids])
+    return points, store.read(spark, ids[-1], "carry")
+
+
+def _refuse_late_rows(what: str, src: DataFrame, carry: DataFrame) -> None:
+    """The in-order contract every carry sink shares: a key's batch
+    event at or before its carried ``last_ts`` is refused — folding it
+    would fabricate an order no replay could reproduce."""
+    late = (
+        src.groupBy("key")
+        .agg(F.min("ts").alias("__first"))
+        .join(carry.select("key", "last_ts"), "key")
+        .filter(F.col("__first") <= F.col("last_ts"))
+        .limit(1)
+        .collect()
+    )
+    if late:
+        raise ValueError(
+            f"{what}: key {late[0]['key']!r} has a batch event at "
+            f"{late[0]['__first']} at or before its carried last_ts "
+            f"{late[0]['last_ts']} — events must arrive in per-key "
+            "time order; re-sequence or dedupe upstream"
         )
 
 
@@ -236,22 +419,13 @@ def stream_dedup_sink(
         "stream_dedup_sink", checkpoint_path, target_path
     )
 
-    import os
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         kept = store.dedup_batch(batch_df, text_col, id_col)
         kept.write.mode("overwrite").format(fmt).save(
             os.path.join(target_path, f"batch_id={batch_id}")
         )
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def stream_bloom_dedup_sink(
@@ -285,9 +459,6 @@ def stream_bloom_dedup_sink(
     Same ONE-checkpoint-lifetime-per-target contract as
     `stream_dedup_sink` (fresh checkpoint against a used target is
     refused)."""
-    import os
-    import re
-
     from d2d_spark.operators.bloom import (
         BloomFilter,
         bloom_dedup_incremental,
@@ -297,51 +468,18 @@ def stream_bloom_dedup_sink(
     _refuse_fresh_checkpoint_on_used_target(
         "stream_bloom_dedup_sink", checkpoint_path, target_path
     )
-    _require_local_state_dir("stream_bloom_dedup_sink", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)\.bloom$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    # the filter state and the checkpoint must share a lifetime, same
-    # as the target: a fresh checkpoint over old state would overwrite
-    # state_after_batch_0 and erase the seen-set; a resumed checkpoint
-    # over a wiped state_dir would silently re-admit every seen key
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    state = _BatchKeyedState.for_sink(
+        "stream_bloom_dedup_sink",
+        state_dir,
+        checkpoint_path,
+        state_noun="filter state",
+        lost_consequence="every historically-seen key would be re-admitted",
+        suffix=".bloom",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_bloom_dedup_sink: checkpoint {checkpoint_path!r} is fresh "
-            f"but state_dir {state_dir!r} already holds filter state from a "
-            "previous checkpoint lifetime. Use a fresh state_dir with the "
-            "fresh checkpoint (and a fresh target), or restore the original "
-            "checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_bloom_dedup_sink: checkpoint {checkpoint_path!r} is "
-            f"resuming but state_dir {state_dir!r} has no filter state — "
-            "every historically-seen key would be re-admitted. Restore the "
-            "state files or start over with a fresh checkpoint AND target."
-        )
-
-    def _load_before(batch_id: int) -> "BloomFilter | None":
-        # re-list per batch: earlier batches of THIS run add state too
-        prior_ids = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior_ids:
-            return None
-        best = max(prior_ids)
-        with open(os.path.join(state_dir, f"state_after_batch_{best}.bloom"), "rb") as f:
-            return BloomFilter.from_bytes(f.read())
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _load_before(batch_id)
+        raw = state.read_bytes(state.newest(below=batch_id))
+        prior = BloomFilter.from_bytes(raw) if raw is not None else None
         if prior is not None:
             # fail BEFORE writing the data partition if the sizing no
             # longer matches the persisted state
@@ -364,124 +502,11 @@ def stream_bloom_dedup_sink(
             fresh.write.mode("overwrite").format(fmt).save(
                 os.path.join(target_path, f"batch_id={batch_id}")
             )
-            # stage-then-rename: a crash mid-write leaves no truncated
-            # state file for the next batch to load
-            final = os.path.join(state_dir, f"state_after_batch_{batch_id}.bloom")
-            tmp = final + ".tmp"
-            with open(tmp, "wb") as f:
-                f.write(updated.to_bytes())
-            os.replace(tmp, final)
+            state.commit(batch_id, updated.to_bytes())
         finally:
             fresh.unpersist()
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
-
-
-class _BatchKeyedParquetState:
-    """Batch-id-keyed parquet state store — the replay/lifetime
-    scaffolding shared by the corpus-state sinks (count-min,
-    exact-quantile): directory scan, BOTH checkpoint-lifetime
-    refusals, newest-prior load, and the atomic-enough
-    tmp-write/rmtree/rename state swap. One implementation so a
-    lifecycle fix lands once, not per sink."""
-
-    _PAT = r"^state_after_batch_(\d+)$"
-
-    def __init__(
-        self,
-        what: str,
-        spark: SparkSession,
-        state_dir: str,
-        checkpoint_path: str,
-        state_noun: str,
-        lost_consequence: str,
-    ) -> None:
-        import os
-        import re
-
-        self._os = os
-        self._spark = spark
-        self._state_dir = state_dir
-        self._pat = re.compile(self._PAT)
-        _require_local_state_dir(what, state_dir)
-        os.makedirs(state_dir, exist_ok=True)
-        state_ids = self._ids()
-        ckpt_local = _local_path(checkpoint_path)
-        checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-            os.path.join(ckpt_local, "offsets")
-        )
-        if checkpoint_is_fresh and state_ids:
-            raise ValueError(
-                f"{what}: checkpoint {checkpoint_path!r} is fresh but "
-                f"state_dir {state_dir!r} holds {state_noun} from a previous "
-                "checkpoint lifetime — use a fresh state_dir, or restore "
-                "the original checkpoint."
-            )
-        if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-            raise ValueError(
-                f"{what}: checkpoint {checkpoint_path!r} is resuming but "
-                f"state_dir {state_dir!r} has no {state_noun} — "
-                f"{lost_consequence}. Restore the state files or start over "
-                "with a fresh checkpoint."
-            )
-
-    def _ids(self, below: int | None = None) -> list[int]:
-        out = []
-        for n in self._os.listdir(self._state_dir):
-            m = self._pat.match(n)
-            if m and (below is None or int(m.group(1)) < below):
-                out.append(int(m.group(1)))
-        return out
-
-    def load_before(self, batch_id: int):
-        prior = self._ids(below=batch_id)
-        if not prior:
-            return None
-        return self._spark.read.parquet(
-            self._os.path.join(self._state_dir, f"state_after_batch_{max(prior)}")
-        )
-
-    def write(self, batch_id: int, state: DataFrame) -> None:
-        import shutil
-
-        final = self._os.path.join(
-            self._state_dir, f"state_after_batch_{batch_id}"
-        )
-        tmp = final + ".tmp"
-        state.write.mode("overwrite").parquet(tmp)
-        # replace atomically-enough: a crash between rmtree and rename
-        # loses only state N, which the replayed batch N re-derives
-        # from state N-1
-        if self._os.path.isdir(final):
-            shutil.rmtree(final)
-        self._os.rename(tmp, final)
-
-    @classmethod
-    def latest(cls, spark: SparkSession, state_dir: str):
-        """Newest persisted state frame in ``state_dir`` — None when
-        the directory is missing or holds no state (a sink that never
-        ran is an answerable question, not an OSError — r10 ADVICE).
-        The one reader behind every ``latest_*_state`` helper, so the
-        scan/guard logic lives once."""
-        import os
-        import re
-
-        if not os.path.isdir(state_dir):
-            return None
-        pat = re.compile(cls._PAT)
-        ids = [int(m.group(1)) for n in os.listdir(state_dir) if (m := pat.match(n))]
-        if not ids:
-            return None
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(ids)}")
-        )
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def stream_cms_sink(
@@ -511,9 +536,9 @@ def stream_cms_sink(
     refused (mixed-shape counters would be garbage)."""
     from d2d_spark.operators.freq import _shape_of, cms_build, cms_merge
 
-    store = _BatchKeyedParquetState(
+    spark = df.sparkSession
+    state = _BatchKeyedState.for_sink(
         "stream_cms_sink",
-        df.sparkSession,
         state_dir,
         checkpoint_path,
         state_noun="sketch state",
@@ -521,7 +546,7 @@ def stream_cms_sink(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        prior = store.load_before(batch_id)
+        prior = state.read(spark, state.newest(below=batch_id))
         sketch = cms_build(batch_df, col, depth=depth, width=width)
         if prior is not None:
             stamped = _shape_of(prior)
@@ -533,22 +558,15 @@ def stream_cms_sink(
                     "mixing shapes"
                 )
             sketch = cms_merge(prior, sketch)
-        store.write(batch_id, sketch)
+        state.commit(batch_id, sketch)
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def latest_cms_state(spark: SparkSession, state_dir: str):
     """The newest persisted sketch from a `stream_cms_sink` state dir
     (None if missing/empty) — feed it to `operators/freq.cms_lookup`."""
-    return _BatchKeyedParquetState.latest(spark, state_dir)
+    return _newest_state(spark, state_dir)
 
 
 def stream_quantile_sink(
@@ -581,14 +599,14 @@ def stream_quantile_sink(
     same exact-vs-sketch split as the dedup family.
 
     Replay-tolerant by the `stream_cms_sink` construction
-    (`_BatchKeyedParquetState`): state is persisted KEYED BY BATCH ID,
+    (`_BatchKeyedState`): state is persisted KEYED BY BATCH ID,
     batch N merges into the newest state with id < N, and a replayed
     batch re-derives byte-identical counts from its original pre-state
     instead of double-counting. Same one-checkpoint-lifetime contract,
     both refusal directions."""
-    store = _BatchKeyedParquetState(
+    spark = df.sparkSession
+    state = _BatchKeyedState.for_sink(
         "stream_quantile_sink",
-        df.sparkSession,
         state_dir,
         checkpoint_path,
         state_noun="quantile state",
@@ -596,36 +614,27 @@ def stream_quantile_sink(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import functions as F
-
         counts = (
             batch_df.filter(F.col(col).isNotNull())
             .groupBy(F.col(col).cast("double").alias("__v"))
             .agg(F.count(F.lit(1)).alias("__c"))
         )
-        prior = store.load_before(batch_id)
+        prior = state.read(spark, state.newest(below=batch_id))
         if prior is not None:
             counts = (
                 prior.unionByName(counts)
                 .groupBy("__v")
                 .agg(F.sum("__c").alias("__c"))
             )
-        store.write(batch_id, counts)
+        state.commit(batch_id, counts)
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def latest_quantile_state(spark: SparkSession, state_dir: str):
     """The newest persisted (value, count) state from a
     `stream_quantile_sink` dir (None if missing/empty)."""
-    return _BatchKeyedParquetState.latest(spark, state_dir)
+    return _newest_state(spark, state_dir)
 
 
 def stream_quantiles(state: DataFrame, probs) -> DataFrame:
@@ -693,11 +702,6 @@ def stream_apply_changes(
     or mounted storage, partition the snapshot write by a stable key
     prefix, and sync the published snapshot to shared storage
     downstream."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     if not keys:
@@ -714,52 +718,15 @@ def stream_apply_changes(
         raise ValueError(f"stream_apply_changes: changes feed lacks columns {missing}")
 
     spark = target.sparkSession
-    _require_local_state_dir("stream_apply_changes", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        "stream_apply_changes",
+        state_dir,
+        checkpoint_path,
+        state_noun="snapshot state",
+        lost_consequence="changes from processed batches would be silently lost",
+        keep_last=2,
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_apply_changes: checkpoint {checkpoint_path!r} is fresh "
-            f"but state_dir {state_dir!r} holds snapshot state from a "
-            "previous checkpoint lifetime — use a fresh state_dir, or "
-            "restore the original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_apply_changes: checkpoint {checkpoint_path!r} is "
-            f"resuming but state_dir {state_dir!r} has no snapshot state — "
-            "changes from processed batches would be silently lost. Restore "
-            "the state files or start over with a fresh checkpoint."
-        )
-
     seq_type = changes.schema[seq_col].dataType
-
-    def _bootstrap() -> DataFrame:
-        return target.select(
-            *keys,
-            *payload,
-            F.lit(None).cast(seq_type).alias("__seq"),
-            F.lit(False).alias("__deleted"),
-        )
-
-    def _load_before(batch_id: int) -> DataFrame:
-        prior_ids = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior_ids:
-            return _bootstrap()
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(prior_ids)}")
-        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         # three actions read this micro-batch (stats, dup probe, fold)
@@ -771,7 +738,14 @@ def stream_apply_changes(
             batch_df.unpersist(blocking=False)
 
     def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = _load_before(batch_id)
+        state = store.read(spark, store.newest(below=batch_id))
+        if state is None:
+            state = target.select(
+                *keys,
+                *payload,
+                F.lit(None).cast(seq_type).alias("__seq"),
+                F.lit(False).alias("__deleted"),
+            )
         stats = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.count_distinct(*[F.col(c) for c in keys + [seq_col]]).alias("nk"),
@@ -852,55 +826,19 @@ def stream_apply_changes(
                 .otherwise(F.col("t.__deleted"))
                 .alias("__deleted"),
             )
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        nxt.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-        # retention: state is a FULL table snapshot per batch (unlike
-        # the sketch sinks' bounded counters) — keep only this batch's
-        # snapshot and its pre-state (all a replay of batch N+1 can
-        # read); everything older is dead weight that would grow
-        # storage O(batches x table)
-        ids = sorted(
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n)
-        )
-        for old_id in ids[:-2]:
-            shutil.rmtree(
-                os.path.join(state_dir, f"state_after_batch_{old_id}"),
-                ignore_errors=True,
-            )
+        store.commit(batch_id, nxt)
 
-    q = (
-        changes.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(changes, handle, checkpoint_path)
 
 
 def latest_cdc_snapshot(spark: SparkSession, state_dir: str):
     """The current target snapshot from a `stream_apply_changes`
-    state dir (None if empty): the newest state minus tombstones and
-    bookkeeping — row-for-row what batch `apply_changes` over the
-    whole feed so far would return."""
-    import os
-    import re
-
-    from pyspark.sql import functions as F
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
+    state dir (None if missing/empty): the newest state minus
+    tombstones and bookkeeping — row-for-row what batch
+    `apply_changes` over the whole feed so far would return."""
+    state = _newest_state(spark, state_dir)
+    if state is None:
         return None
-    state = spark.read.parquet(
-        os.path.join(state_dir, f"state_after_batch_{max(ids)}")
-    )
     return state.filter(~F.col("__deleted")).drop("__seq", "__deleted")
 
 
@@ -955,12 +893,6 @@ def stream_scd2_apply(
     key-partitioned window over runs + batch (history stores RUNS,
     bounded by change count, not raw events), one duplicate-probe
     aggregate."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from d2d_spark.operators.scd import scd2_apply
 
     if not key_cols or not tracked_cols:
@@ -971,31 +903,14 @@ def stream_scd2_apply(
         raise ValueError(f"stream_scd2_apply: snapshot feed lacks columns {missing}")
 
     spark = snapshots.sparkSession
-    _require_local_state_dir("stream_scd2_apply", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        "stream_scd2_apply",
+        state_dir,
+        checkpoint_path,
+        state_noun="history state",
+        lost_consequence="snapshots from processed batches would be silently lost",
+        keep_last=2,
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_scd2_apply: checkpoint {checkpoint_path!r} is fresh "
-            f"but state_dir {state_dir!r} holds history state from a "
-            "previous checkpoint lifetime — use a fresh state_dir, or "
-            "restore the original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_scd2_apply: checkpoint {checkpoint_path!r} is resuming "
-            f"but state_dir {state_dir!r} has no history state — snapshots "
-            "from processed batches would be silently lost. Restore the "
-            "state files or start over with a fresh checkpoint."
-        )
-
     ts_type = snapshots.schema[ts_col].dataType
 
     def _bootstrap() -> DataFrame:
@@ -1009,18 +924,6 @@ def stream_scd2_apply(
             .withColumn("is_current", F.lit(True))
         )
 
-    def _load_before(batch_id: int) -> DataFrame:
-        prior_ids = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior_ids:
-            return _bootstrap()
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(prior_ids)}")
-        )
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
@@ -1029,7 +932,9 @@ def stream_scd2_apply(
             batch_df.unpersist(blocking=False)
 
     def _fold_batch(batch_df: DataFrame, batch_id: int) -> None:
-        state = _load_before(batch_id)
+        state = store.read(spark, store.newest(below=batch_id))
+        if state is None:
+            state = _bootstrap()
         batch = batch_df.select(*key_cols, *tracked_cols, F.col(ts_col))
         # loud (key, ts)-collision guard: union the batch with the
         # stored runs-as-events and refuse any (key, ts) carrying two
@@ -1055,50 +960,16 @@ def stream_scd2_apply(
                 f"{clash[0][ts_col]!r}) — version order would be arbitrary; "
                 "fix the snapshot source's timestamping"
             )
-        nxt = scd2_apply(state, batch, key_cols, ts_col, tracked_cols)
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        nxt.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-        # retention: newest snapshot + its pre-state (all a replay of
-        # batch N+1 can read), the stream_apply_changes discipline
-        ids = sorted(
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n)
-        )
-        for old_id in ids[:-2]:
-            shutil.rmtree(
-                os.path.join(state_dir, f"state_after_batch_{old_id}"),
-                ignore_errors=True,
-            )
+        store.commit(batch_id, scd2_apply(state, batch, key_cols, ts_col, tracked_cols))
 
-    q = (
-        snapshots.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(snapshots, handle, checkpoint_path)
 
 
 def latest_scd2_history(spark: SparkSession, state_dir: str):
     """The current type-2 history from a `stream_scd2_apply` state
-    dir (None if empty) — row-for-row what batch `scd2_history` over
-    every snapshot folded so far would return."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None
-    return spark.read.parquet(
-        os.path.join(state_dir, f"state_after_batch_{max(ids)}")
-    )
+    dir (None if missing/empty) — row-for-row what batch
+    `scd2_history` over every snapshot folded so far would return."""
+    return _newest_state(spark, state_dir)
 
 
 def stream_transition_sink(
@@ -1134,57 +1005,22 @@ def stream_transition_sink(
     refusals as the Bloom/CMS/CDC sinks. State size: |observed state
     alphabet|² counts + one carry row per key — bounded by key
     cardinality, not event count."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from d2d_spark.operators.paths import transition_counts
 
     spark = df.sparkSession
-    _require_local_state_dir("stream_transition_sink", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        "stream_transition_sink",
+        state_dir,
+        checkpoint_path,
+        state_noun="transition state",
+        lost_consequence="counts from processed batches would be silently lost",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_transition_sink: checkpoint {checkpoint_path!r} is fresh "
-            f"but state_dir {state_dir!r} holds transition state from a "
-            "previous checkpoint lifetime — use a fresh state_dir, or restore "
-            "the original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_transition_sink: checkpoint {checkpoint_path!r} is "
-            f"resuming but state_dir {state_dir!r} has no transition state — "
-            "counts from processed batches would be silently lost. Restore "
-            "the state files or start over with a fresh checkpoint."
-        )
     ties = list(tiebreak_cols)
 
-    def _load_before(batch_id: int):
-        prior_ids = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior_ids:
-            return None, None
-        base = os.path.join(state_dir, f"state_after_batch_{max(prior_ids)}")
-        return (
-            spark.read.parquet(os.path.join(base, "counts")),
-            spark.read.parquet(os.path.join(base, "carry")),
-        )
-
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        prior_counts, prior_carry = _load_before(batch_id)
+        prior = store.newest(below=batch_id)
+        prior_counts = store.read(spark, prior, "counts")
+        prior_carry = store.read(spark, prior, "carry")
         # within-batch transitions (the batch operator, probe ON — it
         # owns the NULL/tie refusals)
         within = transition_counts(
@@ -1246,40 +1082,18 @@ def stream_transition_sink(
                 ends.select(F.col("__k").alias("key")), "key", "left_anti"
             )
             carry = untouched.unionByName(carry)
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        counts.write.mode("overwrite").parquet(os.path.join(tmp, "counts"))
-        carry.write.mode("overwrite").parquet(os.path.join(tmp, "carry"))
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        store.commit(batch_id, {"counts": counts, "carry": carry})
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def latest_transition_state(spark: SparkSession, state_dir: str):
     """(counts, carry) from the newest `stream_transition_sink` state
     — counts feeds `operators/paths.transition_probs` directly;
-    (None, None) if empty."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None, None
-    base = os.path.join(state_dir, f"state_after_batch_{max(ids)}")
-    return (
-        spark.read.parquet(os.path.join(base, "counts")),
-        spark.read.parquet(os.path.join(base, "carry")),
-    )
+    (None, None) if missing/empty."""
+    store = _BatchKeyedState(state_dir)
+    newest = store.newest()
+    return store.read(spark, newest, "counts"), store.read(spark, newest, "carry")
 
 
 def stream_ewma_sink(
@@ -1300,144 +1114,32 @@ def stream_ewma_sink(
     twin of the rolling/EWMA family, next to the transition-matrix
     sink.
 
-    Per batch: late rows (a key's event at or before its carried
-    last_ts) are REFUSED loudly — the in-order contract every carry
-    sink shares; the batch's (key, ts, value, ewma) points persist
-    under the batch id (``points``) with the updated carry
-    (key, last_ts, ewma) beside them (``carry``). A NULL value leaves
-    the carry's EWMA untouched but still advances last_ts. Same
-    batch-id-keyed replay discipline and one-checkpoint-lifetime
-    refusals as the Bloom/CMS/CDC/transition sinks. State: ONE carry
-    row per key."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from d2d_spark.operators.timeseries import ewma as batch_ewma
+    The `_series_carry_sink` fold with state ``ewma``: late rows (a
+    key's event at or before its carried last_ts) are REFUSED loudly;
+    the batch's (key, ts, val, ewma) points persist under the batch id
+    (``points``) with the updated carry (key, last_ts, ewma) beside
+    them (``carry``). A NULL value leaves the carry's EWMA untouched
+    but still advances last_ts. State: ONE carry row per key."""
+    from d2d_spark.operators.timeseries import ewma as _ewma
 
     if not (0.0 < alpha <= 1.0):
         raise ValueError(f"stream_ewma_sink: alpha must be in (0, 1], got {alpha}")
-    spark = df.sparkSession
-    _require_local_state_dir("stream_ewma_sink", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+
+    def run_batch(src, seed):
+        return _ewma(src, ["key"], "ts", "val", alpha, init=seed)
+
+    return _series_carry_sink(
+        df, "stream_ewma_sink", key_col, ts_col, value_col, state_dir,
+        checkpoint_path, run_batch, ("ewma",), state_noun="EWMA state",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_ewma_sink: checkpoint {checkpoint_path!r} is fresh but "
-            f"state_dir {state_dir!r} holds EWMA state from a previous "
-            "checkpoint lifetime — use a fresh state_dir, or restore the "
-            "original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_ewma_sink: checkpoint {checkpoint_path!r} is resuming "
-            f"but state_dir {state_dir!r} has no EWMA state — running "
-            "averages from processed batches would be silently lost. Restore "
-            "the state files or start over with a fresh checkpoint."
-        )
-
-    def _load_carry(batch_id: int):
-        prior_ids = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior_ids:
-            return None
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(prior_ids)}", "carry")
-        )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        carry = _load_carry(batch_id)
-        src = batch_df.select(
-            F.col(key_col).alias("key"),
-            F.col(ts_col).alias("ts"),
-            F.col(value_col).alias("val"),
-        )
-        if carry is not None:
-            late = (
-                src.groupBy("key")
-                .agg(F.min("ts").alias("__first"))
-                .join(carry.select("key", "last_ts"), "key")
-                .filter(F.col("__first") <= F.col("last_ts"))
-                .limit(1)
-                .collect()
-            )
-            if late:
-                raise ValueError(
-                    f"stream_ewma_sink: key {late[0]['key']!r} has a batch "
-                    f"event at {late[0]['__first']} at or before its carried "
-                    f"last_ts {late[0]['last_ts']} — events must arrive in "
-                    "per-key time order; re-sequence or dedupe upstream"
-                )
-        seed = carry.select("key", F.col("ewma")) if carry is not None else None
-        pts = batch_ewma(src, ["key"], "ts", "val", alpha, init=seed)
-        new_carry = pts.groupBy("key").agg(
-            F.max("ts").alias("last_ts"),
-            F.max(
-                F.when(F.col("ewma").isNotNull(), F.struct("ts", "ewma"))
-            )["ewma"].alias("__last_y"),
-        )
-        if carry is not None:
-            new_carry = new_carry.join(
-                carry.select("key", F.col("ewma").alias("__prior")), "key", "left"
-            ).select(
-                "key", "last_ts",
-                F.coalesce("__last_y", "__prior").alias("ewma"),
-            )
-            untouched = carry.join(new_carry.select("key"), "key", "left_anti")
-            new_carry = untouched.unionByName(new_carry)
-        else:
-            new_carry = new_carry.select(
-                "key", "last_ts", F.col("__last_y").alias("ewma")
-            )
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        pts.write.mode("overwrite").parquet(os.path.join(tmp, "points"))
-        new_carry.write.mode("overwrite").parquet(os.path.join(tmp, "carry"))
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
-
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
 
 
 def ewma_stream_state(spark: SparkSession, state_dir: str):
     """(points, carry) from a `stream_ewma_sink` state dir: points =
     the union of every batch's emitted rows (replays overwrite their
     own batch dir, so the union is consistent), carry = the newest
-    per-key running state; (None, None) if empty."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None, None
-    pts = spark.read.parquet(
-        *[os.path.join(state_dir, f"state_after_batch_{i}", "points") for i in ids]
-    )
-    carry = spark.read.parquet(
-        os.path.join(state_dir, f"state_after_batch_{max(ids)}", "carry")
-    )
-    return pts, carry
+    per-key running state; (None, None) if missing/empty."""
+    return _points_and_carry(spark, state_dir)
 
 
 def stream_attribution_sink(
@@ -1470,75 +1172,26 @@ def stream_attribution_sink(
     sink shares; same batch-id-keyed replay + one-checkpoint-lifetime
     refusals as the Bloom/CMS/CDC/SCD2/EWMA/transition sinks. State:
     ONE row per key."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
-
     from d2d_spark.operators.attribution import attribution as batch_attribution
 
     spark = df.sparkSession
-    _require_local_state_dir("stream_attribution_sink", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        "stream_attribution_sink",
+        state_dir,
+        checkpoint_path,
+        state_noun="attribution state",
+        lost_consequence="carried touches from processed batches would be silently lost",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_attribution_sink: checkpoint {checkpoint_path!r} is fresh "
-            f"but state_dir {state_dir!r} holds attribution state from a "
-            "previous checkpoint lifetime — use a fresh state_dir, or restore "
-            "the original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_attribution_sink: checkpoint {checkpoint_path!r} is "
-            f"resuming but state_dir {state_dir!r} has no attribution state — "
-            "carried touches from processed batches would be silently lost. "
-            "Restore the state files or start over with a fresh checkpoint."
-        )
-
-    def _load_carry(batch_id: int):
-        prior = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior:
-            return None
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(prior)}", "carry")
-        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        carry = _load_carry(batch_id)
+        carry = store.read(spark, store.newest(below=batch_id), "carry")
         src = batch_df.select(
             F.col(key_col).alias("key"),
             F.col(ts_col).alias("ts"),
             F.col(state_col).alias("state"),
         )
         if carry is not None:
-            late = (
-                src.groupBy("key")
-                .agg(F.min("ts").alias("__first"))
-                .join(carry.select("key", "last_ts"), "key")
-                .filter(F.col("__first") <= F.col("last_ts"))
-                .limit(1)
-                .collect()
-            )
-            if late:
-                raise ValueError(
-                    f"stream_attribution_sink: key {late[0]['key']!r} has a "
-                    f"batch event at {late[0]['__first']} at or before its "
-                    f"carried last_ts {late[0]['last_ts']} — events must "
-                    "arrive in per-key time order; re-sequence upstream"
-                )
+            _refuse_late_rows("stream_attribution_sink", src, carry)
             synth = carry.filter(F.col("touch_ts").isNotNull()).select(
                 "key",
                 F.col("touch_ts").alias("ts"),
@@ -1575,7 +1228,7 @@ def stream_attribution_sink(
         batch_last = src.groupBy("key").agg(F.max("ts").alias("last_ts"))
         new_carry = batch_last.join(new_touch, "key", "left")
         if carry is not None:
-            merged = (
+            new_carry = (
                 carry.select(
                     "key",
                     F.col("last_ts").alias("__plast"),
@@ -1593,44 +1246,17 @@ def stream_attribution_sink(
                     ).alias("touch_state"),
                 )
             )
-            new_carry = merged
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        pts.write.mode("overwrite").parquet(os.path.join(tmp, "points"))
-        new_carry.write.mode("overwrite").parquet(os.path.join(tmp, "carry"))
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        store.commit(batch_id, {"points": pts, "carry": new_carry})
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def attribution_stream_state(spark: SparkSession, state_dir: str):
     """(points, carry) from a `stream_attribution_sink` state dir —
     points = every batch's attributed conversions (batch dirs are
     replay-overwritten, so the union is consistent), carry = the
-    newest per-key latest-touch state; (None, None) if empty."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None, None
-    pts = spark.read.parquet(
-        *[os.path.join(state_dir, f"state_after_batch_{i}", "points") for i in ids]
-    )
-    carry = spark.read.parquet(
-        os.path.join(state_dir, f"state_after_batch_{max(ids)}", "carry")
-    )
-    return pts, carry
+    newest per-key latest-touch state; (None, None) if missing/empty."""
+    return _points_and_carry(spark, state_dir)
 
 
 def _series_carry_sink(
@@ -1638,83 +1264,40 @@ def _series_carry_sink(
     what: str,
     key_col: str,
     ts_col: str,
+    value_col: str,
     state_dir: str,
     checkpoint_path: str,
     run_batch,
     state_cols: tuple,
-    select_src,
+    state_noun: str = "state",
 ):
-    """Shared machinery for the sequential-fold carry sinks (holt,
-    cusum — the ewma sink predates it and keeps its own body): per
-    batch, refuse late rows, run the BATCH operator seeded by the
-    carried per-key state, persist the batch's points under the batch
-    id with the updated carry beside them. Carry = (key, last_ts,
-    *state_cols) where the state is the last NON-NULL state row (a
-    NULL input value leaves fold state untouched but advances
-    last_ts). Same batch-id-keyed replay + one-checkpoint-lifetime
-    refusals as every other sink."""
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
-
+    """Shared machinery for the sequential-fold carry sinks (ewma,
+    holt, cusum): per batch, refuse late rows, run the BATCH operator
+    ``run_batch(src, seed)`` over (key, ts, val) seeded by the carried
+    per-key state, persist the batch's points under the batch id with
+    the updated carry beside them. Carry = (key, last_ts, *state_cols)
+    where the state is the last NON-NULL state row (a NULL input value
+    leaves fold state untouched but advances last_ts). Same
+    batch-id-keyed replay + one-checkpoint-lifetime refusals as every
+    other sink."""
     spark = df.sparkSession
-    _require_local_state_dir(what, state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        what,
+        state_dir,
+        checkpoint_path,
+        state_noun=state_noun,
+        lost_consequence="running folds from processed batches would be silently lost",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"{what}: checkpoint {checkpoint_path!r} is fresh but state_dir "
-            f"{state_dir!r} holds state from a previous checkpoint lifetime — "
-            "use a fresh state_dir, or restore the original checkpoint."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"{what}: checkpoint {checkpoint_path!r} is resuming but "
-            f"state_dir {state_dir!r} has no state — running folds from "
-            "processed batches would be silently lost. Restore the state "
-            "files or start over with a fresh checkpoint."
-        )
-
-    def _load_carry(batch_id: int):
-        prior = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
-        if not prior:
-            return None
-        return spark.read.parquet(
-            os.path.join(state_dir, f"state_after_batch_{max(prior)}", "carry")
-        )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        carry = _load_carry(batch_id)
-        src = select_src(batch_df)
+        carry = store.read(spark, store.newest(below=batch_id), "carry")
+        src = batch_df.select(
+            F.col(key_col).alias("key"),
+            F.col(ts_col).alias("ts"),
+            F.col(value_col).alias("val"),
+        )
         if carry is not None:
-            late = (
-                src.groupBy("key")
-                .agg(F.min("ts").alias("__first"))
-                .join(carry.select("key", "last_ts"), "key")
-                .filter(F.col("__first") <= F.col("last_ts"))
-                .limit(1)
-                .collect()
-            )
-            if late:
-                raise ValueError(
-                    f"{what}: key {late[0]['key']!r} has a batch event at "
-                    f"{late[0]['__first']} at or before its carried last_ts "
-                    f"{late[0]['last_ts']} — events must arrive in per-key "
-                    "time order; re-sequence or dedupe upstream"
-                )
+            _refuse_late_rows(what, src, carry)
         seed = carry.select("key", *state_cols) if carry is not None else None
         pts = run_batch(src, seed)
         state_struct = F.struct(*[F.col(c) for c in state_cols])
@@ -1743,22 +1326,9 @@ def _series_carry_sink(
                 "key", "last_ts",
                 *[F.col(f"__last_s.{c}").alias(c) for c in state_cols],
             )
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        pts.write.mode("overwrite").parquet(os.path.join(tmp, "points"))
-        new_carry.write.mode("overwrite").parquet(os.path.join(tmp, "carry"))
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        store.commit(batch_id, {"points": pts, "carry": new_carry})
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def stream_holt_sink(
@@ -1777,27 +1347,18 @@ def stream_holt_sink(
     carried (level, trend), which composes exactly, so stream points
     are bit-identical to the batch fold over everything seen
     (test-pinned at every prefix). State: ONE carry row per key."""
-    from pyspark.sql import functions as F
-
     from d2d_spark.operators.timeseries import holt_linear as _holt
 
     for name, v in (("alpha", alpha), ("beta", beta)):
         if not (0.0 < v <= 1.0):
             raise ValueError(f"stream_holt_sink: {name} must be in (0, 1], got {v}")
 
-    def select_src(batch_df):
-        return batch_df.select(
-            F.col(key_col).alias("key"),
-            F.col(ts_col).alias("ts"),
-            F.col(value_col).alias("val"),
-        )
-
     def run_batch(src, seed):
         return _holt(src, ["key"], "ts", "val", alpha, beta, init=seed)
 
     return _series_carry_sink(
-        df, "stream_holt_sink", key_col, ts_col, state_dir, checkpoint_path,
-        run_batch, ("level", "trend"), select_src,
+        df, "stream_holt_sink", key_col, ts_col, value_col, state_dir,
+        checkpoint_path, run_batch, ("level", "trend"),
     )
 
 
@@ -1818,16 +1379,7 @@ def stream_cusum_sink(
     (cusum_pos, cusum_neg); stream points (including is_shift flags)
     are bit-identical to the batch fold over everything seen
     (test-pinned at every prefix). State: ONE carry row per key."""
-    from pyspark.sql import functions as F
-
     from d2d_spark.operators.timeseries import cusum_changepoints as _cusum
-
-    def select_src(batch_df):
-        return batch_df.select(
-            F.col(key_col).alias("key"),
-            F.col(ts_col).alias("ts"),
-            F.col(value_col).alias("val"),
-        )
 
     def run_batch(src, seed):
         return _cusum(
@@ -1836,28 +1388,15 @@ def stream_cusum_sink(
         )
 
     return _series_carry_sink(
-        df, "stream_cusum_sink", key_col, ts_col, state_dir, checkpoint_path,
-        run_batch, ("cusum_pos", "cusum_neg"), select_src,
+        df, "stream_cusum_sink", key_col, ts_col, value_col, state_dir,
+        checkpoint_path, run_batch, ("cusum_pos", "cusum_neg"),
     )
 
 
 def series_stream_state(spark: SparkSession, state_dir: str):
     """(points, carry) from a holt/cusum carry-sink state dir — the
     shared reader (same layout as ewma_stream_state)."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None, None
-    pts = spark.read.parquet(
-        *[os.path.join(state_dir, f"state_after_batch_{i}", "points") for i in ids]
-    )
-    carry = spark.read.parquet(
-        os.path.join(state_dir, f"state_after_batch_{max(ids)}", "carry")
-    )
-    return pts, carry
+    return _points_and_carry(spark, state_dir)
 
 
 def stream_psi_sink(
@@ -1884,11 +1423,6 @@ def stream_psi_sink(
     summary under the batch id; the usual replay + checkpoint-lifetime
     refusals apply. NULL values drop, matching the batch operator."""
     import math
-    import os
-    import re
-    import shutil
-
-    from pyspark.sql import functions as F
 
     if smoothing <= 0.0:
         raise ValueError(f"stream_psi_sink: smoothing must be > 0, got {smoothing}")
@@ -1903,28 +1437,13 @@ def stream_psi_sink(
             "shares (len(breakpoints) + 1)"
         )
     spark = df.sparkSession
-    _require_local_state_dir("stream_psi_sink", state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    state_ids = [
-        int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)
-    ]
-    ckpt_local = _local_path(checkpoint_path)
-    checkpoint_is_fresh = ckpt_local is not None and not os.path.isdir(
-        os.path.join(ckpt_local, "offsets")
+    store = _BatchKeyedState.for_sink(
+        "stream_psi_sink",
+        state_dir,
+        checkpoint_path,
+        state_noun="drift state",
+        lost_consequence="cumulative counts from processed batches would be silently lost",
     )
-    if checkpoint_is_fresh and state_ids:
-        raise ValueError(
-            f"stream_psi_sink: checkpoint {checkpoint_path!r} is fresh but "
-            f"state_dir {state_dir!r} holds drift state from a previous "
-            "checkpoint lifetime — use a fresh state_dir."
-        )
-    if ckpt_local is not None and not checkpoint_is_fresh and not state_ids:
-        raise ValueError(
-            f"stream_psi_sink: checkpoint {checkpoint_path!r} is resuming but "
-            f"state_dir {state_dir!r} has no drift state — cumulative counts "
-            "from processed batches would be silently lost."
-        )
 
     def _psi(counts: list) -> float | None:
         n = sum(counts)
@@ -1938,16 +1457,10 @@ def stream_psi_sink(
         return out
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        prior = [
-            int(pat.match(n).group(1))
-            for n in os.listdir(state_dir)
-            if pat.match(n) and int(pat.match(n).group(1)) < batch_id
-        ]
         cum = [0] * nb
-        if prior:
-            for r in spark.read.parquet(
-                os.path.join(state_dir, f"state_after_batch_{max(prior)}", "bins")
-            ).collect():
+        prior = store.read(spark, store.newest(below=batch_id), "bins")
+        if prior is not None:
+            for r in prior.collect():
                 cum[int(r["bin"])] = int(r["cum_count"])
         arr = F.array(*[F.lit(b) for b in bps])
         bucket = F.aggregate(
@@ -1969,36 +1482,14 @@ def stream_psi_sink(
         psi_df = spark.createDataFrame(
             [(_psi(batch_counts), _psi(new_cum))], "psi_batch double, psi_cum double"
         )
-        final = os.path.join(state_dir, f"state_after_batch_{batch_id}")
-        tmp = final + ".tmp"
-        bins_df.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "bins"))
-        psi_df.coalesce(1).write.mode("overwrite").parquet(os.path.join(tmp, "psi"))
-        if os.path.isdir(final):
-            shutil.rmtree(final)
-        os.rename(tmp, final)
+        store.commit(batch_id, {"bins": bins_df.coalesce(1), "psi": psi_df.coalesce(1)})
 
-    q = (
-        df.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _run_foreach_batch(df, handle, checkpoint_path)
 
 
 def psi_stream_state(spark: SparkSession, state_dir: str):
     """(bins, psi) from the newest stream_psi_sink state; (None, None)
-    if empty."""
-    import os
-    import re
-
-    pat = re.compile(r"^state_after_batch_(\d+)$")
-    ids = [int(pat.match(n).group(1)) for n in os.listdir(state_dir) if pat.match(n)]
-    if not ids:
-        return None, None
-    base = os.path.join(state_dir, f"state_after_batch_{max(ids)}")
-    return (
-        spark.read.parquet(os.path.join(base, "bins")),
-        spark.read.parquet(os.path.join(base, "psi")),
-    )
+    if missing/empty."""
+    store = _BatchKeyedState(state_dir)
+    newest = store.newest()
+    return store.read(spark, newest, "bins"), store.read(spark, newest, "psi")

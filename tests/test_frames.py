@@ -79,3 +79,31 @@ def test_local_frame_preserves_row_order(spark):
     rows = [(i,) for i in (5, 3, 9, 1)]
     got = [r["n"] for r in local_frame(spark, rows, "n long").collect()]
     assert got == [5, 3, 9, 1]
+
+
+def test_local_frame_jvm_refusal_still_falls_back(spark):
+    """A value the JVM literal path refuses (a dict for a map column)
+    still takes the createDataFrame path."""
+    from d2d_spark.functions.frames import local_frame
+
+    schema = "id long, m map<string,int>"
+    rows = [(1, {"a": 1}), (2, {})]
+    got = local_frame(spark, rows, schema)
+    assert _rows(got) == _rows(spark.createDataFrame(rows, schema))
+
+
+def test_local_frame_unexpected_error_propagates(spark, monkeypatch):
+    """Only the failures the literal path expects fall back; any other
+    exception (a caller bug) surfaces instead of silently taking the
+    slow path."""
+    from d2d_spark.functions import frames
+
+    class CallerBug(Exception):
+        pass
+
+    def broken_lit(v):
+        raise CallerBug("boom")
+
+    monkeypatch.setattr(frames.F, "lit", broken_lit)
+    with pytest.raises(CallerBug, match="boom"):
+        frames.local_frame(spark, [("a", 1)], "k string, n long")
