@@ -14,11 +14,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from d2d_spark.operators.join import dedup_build_side, key_merge
 from d2d_spark.sources.base import Sink, Source
@@ -26,14 +28,102 @@ from d2d_spark.sources.base import Sink, Source
 RowFn = Callable[[dict], dict | None]
 
 
-def _infer_transform_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str):
+def _numpy_native(t: pa.DataType) -> bool:
+    """Types whose null-free columns NumPy turns into the exact Python
+    values ``Row.asDict`` holds (``int``, ``float``, ``bool``, ``str``,
+    ``date``, naive ``datetime``)."""
+    return (
+        pa.types.is_integer(t)
+        or pa.types.is_floating(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_date32(t)
+        or (pa.types.is_timestamp(t) and t.unit == "us" and t.tz is None)
+    )
+
+
+def _zone(tz: str):
+    """The ``tzinfo`` pyarrow uses for time zone name ``tz``."""
+    return pa.scalar(0, type=pa.timestamp("us", tz=tz)).as_py().tzinfo
+
+
+def _fix(f, v):
+    return v if f is None or v is None else f(v)
+
+
+def _fixer(t: pa.DataType, tz: str):
+    """The function that turns one ``to_pylist`` value of type ``t``
+    into the ``Row.asDict(recursive=True)`` value, or None where the two
+    already agree: a map becomes a dict and a zoned timestamp a naive
+    wall-clock ``datetime`` in time zone ``tz``."""
+    if pa.types.is_timestamp(t) and t.tz is not None:
+        zone = _zone(tz)
+        return lambda v: v.astimezone(zone).replace(tzinfo=None)
+    if pa.types.is_map(t):
+        vf = _fixer(t.item_type, tz)
+        return lambda v: {k: _fix(vf, x) for k, x in v}
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        f = _fixer(t.value_type, tz)
+        return None if f is None else (lambda v: [_fix(f, x) for x in v])
+    if pa.types.is_struct(t):
+        fields = [(fld.name, f) for fld in t if (f := _fixer(fld.type, tz)) is not None]
+        if not fields:
+            return None
+
+        def fix(v):
+            for name, f in fields:
+                v[name] = _fix(f, v[name])
+            return v
+
+        return fix
+    return None
+
+
+def _column_values(col: pa.Array, tz: str) -> list:
+    """One Arrow column as the Python values ``format_data`` receives:
+    SQL NULL is None, a float NaN stays NaN, and a TIMESTAMP is the
+    naive wall-clock time in session time zone ``tz``."""
+    if pa.types.is_timestamp(col.type) and col.type.tz is not None:
+        col = pc.local_timestamp(col.cast(pa.timestamp(col.type.unit, tz)))
+    if col.null_count == 0 and _numpy_native(col.type):
+        return col.to_numpy(zero_copy_only=False).tolist()
+    values = col.to_pylist()
+    f = _fixer(col.type, tz)
+    return values if f is None else [_fix(f, v) for v in values]
+
+
+def _batch_rows(batch: pa.RecordBatch, tz: str) -> list[dict]:
+    """``batch``'s rows as the dicts ``format_data`` receives — the
+    ``Row.asDict(recursive=True)`` values, built column by column. The
+    driver-side sample and the workers both go through here."""
+    names = batch.schema.names
+    cols = [_column_values(c, tz) for c in batch.columns]
+    return [dict(zip(names, r)) for r in zip(*cols)]
+
+
+def _session_tz(df: DataFrame) -> str:
+    return df.sparkSession.conf.get("spark.sql.session.timeZone")
+
+
+def _infer_transform_schema(
+    df: DataFrame, fn: RowFn, sample: int, on_error: str, tz: str
+) -> T.StructType:
     """Run ``fn`` over a driver-side sample to infer the output schema
     (the plan-level analog of the reference's infer-from-first-row).
-    Sample-row failures respect ``on_error`` — under skip/quarantine a
-    row that crashes the transform must not crash inference either."""
-    sample_rows = [r.asDict(recursive=True) for r in df.limit(sample).collect()]
+    The sample comes through the workers' row builder, so ``fn`` sees
+    the same values on both sides. Sample-row failures respect
+    ``on_error`` — under skip/quarantine a row that crashes the
+    transform must not crash inference either. Types are Arrow's
+    inference over each key's sampled values, so an integer key with a
+    None in the sample stays ``bigint``."""
+    # coalesce(1) first: a bare limit collected as Arrow runs a task on
+    # every input partition plus a shuffle, where this is one task that
+    # reads partitions in order and stops at `sample` rows
+    table = df.coalesce(1).limit(sample).toArrow()
+    rows = [r for b in table.to_batches() for r in _batch_rows(b, tz)]
     transformed = []
-    for r in sample_rows:
+    for r in rows:
         try:
             t = fn(r)
         except Exception:
@@ -46,33 +136,49 @@ def _infer_transform_schema(df: DataFrame, fn: RowFn, sample: int, on_error: str
         raise ValueError(
             "format_data dropped or failed every sample row; cannot infer output schema"
         )
-    schema = df.sparkSession.createDataFrame(pd.DataFrame(transformed)).schema
-    return schema, [f.name for f in schema.fields]
+    keys = dict.fromkeys(k for t in transformed for k in t)
+    table = pa.table({k: pa.array([t.get(k) for t in transformed]) for k in keys})
+    return from_arrow_schema(table.schema)
 
 
-def _integral_cols(df: DataFrame) -> frozenset[str]:
-    return frozenset(f.name for f in df.schema.fields if isinstance(f.dataType, T.IntegralType))
+def _batch_builder(schema: T.StructType, tz: str):
+    """The function that turns a list of ``format_data`` output dicts
+    into one Arrow batch of ``schema``. A missing key is NULL, an
+    integer stays exact, and a naive ``datetime`` bound for a TIMESTAMP
+    column is read as wall-clock time in session time zone ``tz`` (a
+    zoned one keeps its instant)."""
+    arrow = to_arrow_schema(schema)
+    stamps = [i for i, f in enumerate(schema.fields) if isinstance(f.dataType, T.TimestampType)]
+    zone = _zone(tz)
+
+    def wall(v):
+        return v if getattr(v, "tzinfo", None) is None else v.astimezone(zone).replace(tzinfo=None)
+
+    def build(rows: list[dict]) -> pa.RecordBatch:
+        batch = pa.RecordBatch.from_pylist(rows, schema=arrow)
+        if not stamps:
+            return batch
+        cols = batch.columns
+        for i in stamps:
+            name = arrow.field(i).name
+            naive = pa.array([wall(r.get(name)) for r in rows], pa.timestamp("us"))
+            cols[i] = pc.assume_timezone(naive, tz, ambiguous="latest").cast(arrow.field(i).type)
+        return pa.RecordBatch.from_arrays(cols, schema=arrow)
+
+    return build
 
 
-def _row_dicts(pdf: pd.DataFrame, integral: frozenset[str]) -> list[dict]:
-    """``pdf``'s rows as dicts holding the values the driver-side
-    sample hands ``format_data`` (``Row.asDict``). Arrow delivers SQL
-    NULL as NaN/NaT and a nullable integral column as float64, so each
-    column that holds a NULL in this batch is rebuilt as Python
-    objects: None for NULL, ``int`` for integral columns. A float
-    column's NaN cannot be told from NULL here and becomes None too.
-    Null-free columns pass through untouched."""
-    for c in pdf.columns:
-        s = pdf[c]
-        if not s.hasnans:
-            continue
-        null = s.isna()
-        if c in integral:
-            vals = [None if n else int(v) for v, n in zip(s.to_numpy(), null.to_numpy())]
-            pdf[c] = pd.Series(vals, index=pdf.index, dtype="object")
-        else:
-            pdf[c] = s.astype("object").where(~null, None)
-    return pdf.to_dict("records")
+def _refuse_unsampled_keys(rows: list[dict], cols: frozenset, sample: int) -> None:
+    # a key the sample never saw would be silently dropped by the
+    # fixed-schema batch — fail loudly instead (schema drift is a bug,
+    # not a column to lose)
+    extra = set().union(*(t.keys() for t in rows)) - cols
+    if extra:
+        raise ValueError(
+            f"format_data emitted keys absent from the sampled schema: "
+            f"{sorted(extra)}; emit them in the first {sample} rows or "
+            f"raise the sample size"
+        )
 
 
 def apply_format_data(
@@ -86,9 +192,17 @@ def apply_format_data(
     Expression fast path: a {col: Column} dict becomes withColumns —
     pure Catalyst, codegen, no Python in the hot path. Callable path:
     the reference's dict->dict contract runs in Arrow-batched
-    mapInPandas; output schema is inferred by running the transform
-    over a driver-side sample, then applied distributed. Returning a
-    falsy value drops the row (:115-117).
+    ``mapInArrow``; the output schema is inferred by running the
+    transform over a driver-side sample, then applied distributed.
+    Returning a falsy value drops the row (:115-117).
+
+    ``fn`` receives what ``Row.asDict(recursive=True)`` holds, on the
+    driver and the workers alike: None for SQL NULL, NaN for a float
+    NaN, ``int`` for integer columns, ``Decimal``, ``bytes``,
+    ``date``, naive ``datetime`` (a TIMESTAMP on the session time
+    zone's wall clock), and dicts for map and struct columns. Rows are
+    built column by column from Arrow and the output batch straight
+    from the returned dicts.
 
     ``on_error``: ``'raise'`` is reference parity — failures re-raise
     carrying the offending row (d22d/task.py:172-180). ``'skip'``
@@ -106,13 +220,15 @@ def apply_format_data(
             out = out.withColumn(name, expr)
         return out
 
-    schema, cols = _infer_transform_schema(df, fn, sample, on_error)
-    integral = _integral_cols(df)
+    tz = _session_tz(df)
+    schema = _infer_transform_schema(df, fn, sample, on_error, tz)
+    cols = frozenset(schema.names)
+    build = _batch_builder(schema, tz)
 
     def run(batches):
-        for pdf in batches:
+        for batch in batches:
             out = []
-            for rec in _row_dicts(pdf, integral):
+            for rec in _batch_rows(batch, tz):
                 try:
                     t = fn(rec)
                 except Exception as e:
@@ -123,22 +239,10 @@ def apply_format_data(
                     raise RuntimeError(f"format_data failed on row {rec!r}") from e
                 if t:
                     out.append(t)
-            if out:
-                # a key the sample never saw would be silently dropped
-                # by the fixed-column DataFrame below — fail loudly
-                # instead (schema drift is a bug, not a column to lose)
-                extra = set().union(*(t.keys() for t in out)) - set(cols)
-                if extra:
-                    raise ValueError(
-                        f"format_data emitted keys absent from the sampled schema: "
-                        f"{sorted(extra)}; emit them in the first {sample} rows or "
-                        f"raise the sample size"
-                    )
-            yield pd.DataFrame(out, columns=cols) if out else pd.DataFrame(
-                {c: pd.Series(dtype="object") for c in cols}
-            )
+            _refuse_unsampled_keys(out, cols, sample)
+            yield build(out)
 
-    return df.mapInPandas(run, schema=schema)
+    return df.mapInArrow(run, schema=schema)
 
 
 def format_data_with_quarantine(
@@ -147,11 +251,13 @@ def format_data_with_quarantine(
     """Per-row transform with an auditable bad-row channel.
 
     Returns ``(good, bad)``: ``good`` is the transformed frame exactly
-    as ``apply_format_data`` would produce it; ``bad`` has one row per
-    failing input — ``(row_json, error)`` — ready to write to a
-    quarantine table for replay after the transform is fixed.
+    as ``apply_format_data`` would produce it, from the same
+    ``Row.asDict`` values; ``bad`` has one row per failing input —
+    ``(row_json, error)``, the row as sorted-key JSON with non-JSON
+    values as ``str`` — ready to write to a quarantine table for replay
+    after the transform is fixed.
 
-    Both frames are filters over ONE wide mapInPandas stage, so the
+    Both frames are filters over ONE wide ``mapInArrow`` stage, so the
     transform logic runs once per row per action. A caller consuming
     both sides should either write them in one pass (``Migration``'s
     ``quarantine`` mode persists the wide stage around its two writes)
@@ -159,23 +265,25 @@ def format_data_with_quarantine(
     """
     import json
 
-    schema, cols = _infer_transform_schema(df, fn, sample, on_error="skip")
-    integral = _integral_cols(df)
+    tz = _session_tz(df)
+    schema = _infer_transform_schema(df, fn, sample, "skip", tz)
+    cols = frozenset(schema.names)
     wide_schema = T.StructType(
         list(schema.fields)
         + [T.StructField("__row", T.StringType()), T.StructField("__error", T.StringType())]
     )
-    wide_cols = cols + ["__row", "__error"]
+    # good rows leave __row/__error NULL and bad rows the data columns;
+    # one batch holds both without touching the good rows' values
+    build = _batch_builder(wide_schema, tz)
 
     def run(batches):
-        yielded = False
-        for pdf in batches:
-            good, bad = [], []
-            for rec in _row_dicts(pdf, integral):
+        for batch in batches:
+            out = []
+            for rec in _batch_rows(batch, tz):
                 try:
                     t = fn(rec)
                 except Exception as e:
-                    bad.append(
+                    out.append(
                         {
                             "__row": json.dumps(rec, default=str, sort_keys=True),
                             "__error": f"{type(e).__name__}: {e}",
@@ -183,27 +291,11 @@ def format_data_with_quarantine(
                     )
                     continue
                 if t:
-                    extra = set(t.keys()) - set(cols)
-                    if extra:
-                        raise ValueError(
-                            f"format_data emitted keys absent from the sampled "
-                            f"schema: {sorted(extra)}"
-                        )
-                    good.append(t)
-            # good and bad rows are SEPARATE frames: one mixed frame
-            # would NaN-fill the data columns of bad rows, coercing
-            # int64 columns to float64 and silently rounding good-row
-            # values above 2^53
-            if good:
-                yielded = True
-                yield pd.DataFrame(good, columns=wide_cols)
-            if bad:
-                yielded = True
-                yield pd.DataFrame(bad, columns=wide_cols, dtype="object")
-        if not yielded:
-            yield pd.DataFrame({c: pd.Series(dtype="object") for c in wide_cols})
+                    _refuse_unsampled_keys([t], cols, sample)
+                    out.append(t)
+            yield build(out)
 
-    wide = df.mapInPandas(run, schema=wide_schema)
+    wide = df.mapInArrow(run, schema=wide_schema)
     if persist:
         from pyspark import StorageLevel
 

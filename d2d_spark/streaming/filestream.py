@@ -215,9 +215,11 @@ class _BatchKeyedState:
     content instead of folding into its own output. A commit stages
     ``<name>.tmp`` and renames it into place, so a crash mid-write
     leaves no truncated state for the next batch to load.
-    ``keep_last`` prunes older entries after each commit: the
-    full-table CDC/SCD2 snapshots keep two, the newest and its
-    pre-state, which is all a replay can read.
+    ``keep_last`` prunes older entries after each commit. A sink
+    whose readers read only the newest entry keeps two, the newest and
+    its pre-state, which is all a replay can read; the carry sinks
+    keep every entry, because their readers union each batch's
+    ``points``.
 
     ``state_dir`` may be a plain path or a ``file:`` URI: os-level
     calls use the resolved local path, Spark reads and writes the path
@@ -336,7 +338,11 @@ class _BatchKeyedState:
         os.replace(tmp, final)
         if self._keep_last:
             for old in self.ids()[: -self._keep_last]:
-                shutil.rmtree(os.path.join(self._local, self._name(old)), ignore_errors=True)
+                path = os.path.join(self._local, self._name(old))
+                if os.path.isdir(path):
+                    shutil.rmtree(path, ignore_errors=True)
+                else:
+                    os.remove(path)
 
 
 def _newest_state(spark: SparkSession, state_dir: str):
@@ -453,8 +459,8 @@ def stream_bloom_dedup_sink(
     survivor set, then overwrites both its data partition and its
     state file with identical bytes. (Folding survivors into a single
     mutable state file would make a replayed batch see its own keys
-    as seen and silently emit nothing.) Old state files are the
-    provenance trail; prune them like any checkpoint retention.
+    as seen and silently emit nothing.) Only the newest filter and
+    its pre-state are kept, all a replay can read.
 
     Same ONE-checkpoint-lifetime-per-target contract as
     `stream_dedup_sink` (fresh checkpoint against a used target is
@@ -475,6 +481,7 @@ def stream_bloom_dedup_sink(
         state_noun="filter state",
         lost_consequence="every historically-seen key would be re-admitted",
         suffix=".bloom",
+        keep_last=2,
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -543,6 +550,7 @@ def stream_cms_sink(
         checkpoint_path,
         state_noun="sketch state",
         lost_consequence="counts from processed batches would be silently lost",
+        keep_last=2,
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -611,6 +619,7 @@ def stream_quantile_sink(
         checkpoint_path,
         state_noun="quantile state",
         lost_consequence="counts from processed batches would be silently lost",
+        keep_last=2,
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
@@ -1014,6 +1023,7 @@ def stream_transition_sink(
         checkpoint_path,
         state_noun="transition state",
         lost_consequence="counts from processed batches would be silently lost",
+        keep_last=2,
     )
     ties = list(tiebreak_cols)
 
@@ -1443,6 +1453,7 @@ def stream_psi_sink(
         checkpoint_path,
         state_noun="drift state",
         lost_consequence="cumulative counts from processed batches would be silently lost",
+        keep_last=2,
     )
 
     def _psi(counts: list) -> float | None:

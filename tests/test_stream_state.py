@@ -155,3 +155,51 @@ def test_file_uri_state_dir_resolves_to_local_path(spark, tmp_path, monkeypatch)
     got = fs.latest_quantile_state(spark, state_uri)
     counts = {r["__v"]: r["__c"] for r in got.orderBy(F.col("__v")).collect()}
     assert counts == {1.0: 1, 2.0: 3, 5.0: 1}
+
+
+def _entry(spark, path: str):
+    """A state entry's content: the bytes of a file entry, else the
+    sorted rows of the frame or of each named part."""
+    if os.path.isfile(path):
+        with open(path, "rb") as f:
+            return f.read()
+    parts = sorted(p for p in os.listdir(path) if os.path.isdir(os.path.join(path, p)))
+
+    def rows(p):
+        return sorted(repr(r) for r in spark.read.parquet(p).collect())
+
+    return {p: rows(os.path.join(path, p)) for p in parts} if parts else rows(path)
+
+
+@pytest.mark.parametrize("sink", ["bloom", "cms", "quantile", "transition", "psi"])
+def test_newest_only_sinks_keep_two_entries_and_replay(spark, tmp_path, sink):
+    """Sinks whose readers read only the newest entry, and whose batch
+    N reads only the newest entry below N, keep the last two entries:
+    after three batches the state dir holds exactly two, and replaying
+    the newest batch (its commit dropped from the checkpoint)
+    reproduces its entry from the one before it."""
+    start, suffix = SINKS[sink]
+    src, state, ckpt = tmp_path / "src", tmp_path / "state", tmp_path / "ckpt"
+
+    def run():
+        start(fs.file_stream(spark, str(src) + "/*", SCHEMA), str(state), str(ckpt), tmp_path)
+
+    for b in range(3):
+        rows = [
+            (f"k{i % 3}", 10 * b + i, float(i + b), ["ad", "buy", "view"][i % 3], "v", i, "u")
+            for i in range(6)
+        ]
+        spark.createDataFrame(rows, SCHEMA).write.parquet(str(src / f"d{b}"))
+        run()
+    names = sorted(n for n in os.listdir(state) if n.startswith("state_after_batch_"))
+    assert names == [f"state_after_batch_{i}{suffix}" for i in (1, 2)]
+
+    newest = str(state / names[-1])
+    before = _entry(spark, newest)
+    for name in ("2", ".2.crc"):
+        if (ckpt / "commits" / name).exists():
+            (ckpt / "commits" / name).unlink()
+    run()
+    assert (ckpt / "commits" / "2").exists()
+    assert sorted(n for n in os.listdir(state) if n.startswith("state_after_batch_")) == names
+    assert _entry(spark, newest) == before
