@@ -141,28 +141,79 @@ def _infer_transform_schema(
     return from_arrow_schema(table.schema)
 
 
+def _wall_fixer(t: pa.DataType, zone):
+    """The function that turns one ``format_data`` output value bound
+    for Arrow type ``t`` into the same value with every zoned datetime
+    for a TIMESTAMP, at any depth, as its naive wall-clock time in
+    ``zone``, or None when ``t`` holds no TIMESTAMP. Output types are
+    inferred, and Arrow infers a returned dict as a struct, so nested
+    values sit in lists and structs only."""
+    if pa.types.is_timestamp(t):
+        if t.tz is None:
+            return None
+        return lambda v: (
+            v if getattr(v, "tzinfo", None) is None else v.astimezone(zone).replace(tzinfo=None)
+        )
+    if pa.types.is_list(t):
+        f = _wall_fixer(t.value_type, zone)
+        return None if f is None else (lambda v: [_fix(f, x) for x in v])
+    if pa.types.is_struct(t):
+        fields = [(fld.name, f) for fld in t if (f := _wall_fixer(fld.type, zone))]
+        if not fields:
+            return None
+        return lambda v: {**v, **{n: _fix(f, v[n]) for n, f in fields if n in v}}
+    return None
+
+
+def _naive(t: pa.DataType) -> pa.DataType:
+    """``t`` with every timestamp type, at any depth, zone-free."""
+    if pa.types.is_timestamp(t):
+        return pa.timestamp(t.unit)
+    if pa.types.is_list(t):
+        return pa.list_(t.value_field.with_type(_naive(t.value_type)))
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_naive(f.type)) for f in t])
+    return t
+
+
+def _localize(arr: pa.Array, t: pa.DataType, tz: str) -> pa.Array:
+    """``arr`` (of type ``_naive(t)``, built by ``pa.array``) as type
+    ``t``, every naive time bound for a TIMESTAMP read as wall-clock
+    time in time zone ``tz``."""
+    if pa.types.is_timestamp(t):
+        return arr if t.tz is None else pc.assume_timezone(arr, tz, ambiguous="latest").cast(t)
+    if pa.types.is_list(t):
+        values = _localize(arr.values, t.value_type, tz)
+        return pa.ListArray.from_arrays(arr.offsets, values, type=t, mask=arr.is_null())
+    if pa.types.is_struct(t):
+        children = [_localize(arr.field(i), f.type, tz) for i, f in enumerate(t)]
+        return pa.StructArray.from_arrays(children, fields=list(t), mask=arr.is_null())
+    return arr
+
+
 def _batch_builder(schema: T.StructType, tz: str):
     """The function that turns a list of ``format_data`` output dicts
     into one Arrow batch of ``schema``. A missing key is NULL, an
     integer stays exact, and a naive ``datetime`` bound for a TIMESTAMP
-    column is read as wall-clock time in session time zone ``tz`` (a
-    zoned one keeps its instant)."""
+    is read as wall-clock time in session time zone ``tz`` (a zoned one
+    keeps its instant), at the top level and inside arrays and structs
+    alike: pyarrow would store either one's wall clock as UTC."""
     arrow = to_arrow_schema(schema)
-    stamps = [i for i, f in enumerate(schema.fields) if isinstance(f.dataType, T.TimestampType)]
     zone = _zone(tz)
-
-    def wall(v):
-        return v if getattr(v, "tzinfo", None) is None else v.astimezone(zone).replace(tzinfo=None)
+    stamped = [
+        (i, f.name, wall, _naive(f.type))
+        for i, f in enumerate(arrow)
+        if (wall := _wall_fixer(f.type, zone)) is not None
+    ]
 
     def build(rows: list[dict]) -> pa.RecordBatch:
         batch = pa.RecordBatch.from_pylist(rows, schema=arrow)
-        if not stamps:
+        if not stamped:
             return batch
         cols = batch.columns
-        for i in stamps:
-            name = arrow.field(i).name
-            naive = pa.array([wall(r.get(name)) for r in rows], pa.timestamp("us"))
-            cols[i] = pc.assume_timezone(naive, tz, ambiguous="latest").cast(arrow.field(i).type)
+        for i, name, wall, naive in stamped:
+            walled = pa.array([_fix(wall, r.get(name)) for r in rows], naive)
+            cols[i] = _localize(walled, arrow.field(i).type, tz)
         return pa.RecordBatch.from_arrays(cols, schema=arrow)
 
     return build

@@ -14,8 +14,6 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 _MIB = 1 << 20
 _GIB = 1 << 30
 # cgroup v1 reports "no limit" as LONG_MAX rounded down to a page
@@ -92,6 +90,18 @@ def _host_driver_memory() -> str:
     return driver_memory(ram, limit, os.environ.get("SPARK_GRAFT_DRIVER_MEM"))
 
 
+def engine_cpus() -> int:
+    """Task slots for ``local[N]`` and the static shuffle width:
+    ``SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run
+    on. Each slot can hold a Python worker (about 165 MB), so more
+    slots than CPUs costs memory and buys no parallelism."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+# the directory that holds the d2d_spark package, for the workers' PYTHONPATH
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def get_spark(
     app_name: str = "d2d_spark",
     master: str | None = None,
@@ -104,15 +114,21 @@ def get_spark(
     partitions and rewrites skewed joins at runtime, so the static
     ``shuffle.partitions`` only needs to be an upper bound ~2-3x the
     executor-core count. Parquet pushdown/pruning are on by default.
+
+    ``master`` defaults to ``local[engine_cpus()]`` and
+    ``shuffle_partitions`` to the same count, both read at each call.
+    The driver heap is ``_host_driver_memory()``. Python workers run
+    under ``d2d_spark._pyspark.daemon``, which stops every task from
+    re-reading pyspark's zip (0.1-0.25 s a task on CPython 3.11), so
+    workers must be able to import ``d2d_spark``: the package's own
+    root is put on their PYTHONPATH, and elsewhere it must be
+    installed, as the bridges' pickled helpers already require.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = engine_cpus()
     builder = (
         SparkSession.builder.master(master or f"local[{cpus}]")
         .appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -143,6 +159,8 @@ def get_spark(
         # while bounding the pathological case.
         .config("spark.sql.maxPlanStringLength", "8388608")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "d2d_spark._pyspark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
         .config("spark.driver.memory", _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")

@@ -237,3 +237,45 @@ def test_driver_sample_reads_one_partition_in_one_task(spark):
         for s in tracker.getJobInfo(j).stageIds
     ]
     assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+
+
+def test_nested_timestamps_follow_the_session_time_zone(spark):
+    """A TIMESTAMP inside a returned array or struct (a returned dict
+    lands as a struct) follows the top-level rule: a zoned datetime
+    keeps its instant and a naive one is wall-clock time in the session
+    time zone. pyarrow alone would store either one's wall clock as
+    UTC."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        zoned = datetime.datetime(2020, 1, 1, 10, tzinfo=datetime.timezone(datetime.timedelta(hours=-5)))
+        naive = datetime.datetime(2020, 7, 1, 10)  # EDT: 14:00Z
+
+        def fn(d):
+            return {
+                "id": d["id"],
+                "top": naive,
+                "arr_z": [zoned, None],
+                "arr_n": [naive],
+                "nested": [[zoned]],
+                "st": {"z": zoned, "n": naive, "inner": {"z": zoned}},
+            }
+
+        out = apply_format_data(spark.range(0, 2, 1, 2), fn)
+        assert dict(out.dtypes)["arr_z"] == "array<timestamp>"
+        got = out.selectExpr(
+            "unix_seconds(top) AS top",
+            "transform(arr_z, x -> unix_seconds(x)) AS arr_z",
+            "unix_seconds(arr_n[0]) AS arr_n",
+            "unix_seconds(nested[0][0]) AS nested",
+            "unix_seconds(st.z) AS st_z",
+            "unix_seconds(st.n) AS st_n",
+            "unix_seconds(st.inner.z) AS inner_z",
+        ).collect()
+        z = int(zoned.timestamp())  # 2020-01-01 15:00Z
+        n = int(datetime.datetime(2020, 7, 1, 14, tzinfo=datetime.timezone.utc).timestamp())
+        want = {"top": n, "arr_z": [z, None], "arr_n": n, "nested": z, "st_z": z, "st_n": n, "inner_z": z}
+        assert [r.asDict() for r in got] == [want, want]
+    finally:
+        spark.conf.set(key, old)
