@@ -13,6 +13,7 @@ per-table PKs, insert modes, migrate-all-tables-when-unset.
 from __future__ import annotations
 
 from collections.abc import Callable
+from datetime import timezone
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -141,24 +142,29 @@ def _infer_transform_schema(
     return from_arrow_schema(table.schema)
 
 
-def _wall_fixer(t: pa.DataType, zone):
-    """The function that turns one ``format_data`` output value bound
-    for Arrow type ``t`` into the same value with every zoned datetime
-    for a TIMESTAMP, at any depth, as its naive wall-clock time in
-    ``zone``, or None when ``t`` holds no TIMESTAMP. Output types are
-    inferred, and Arrow infers a returned dict as a struct, so nested
-    values sit in lists and structs only."""
+def _stamp_fixer(t: pa.DataType, zoned: bool):
+    """The function that keeps one kind of datetime in a ``format_data``
+    output value bound for Arrow type ``t``, or None when ``t`` holds no
+    zoned TIMESTAMP. At any depth, each datetime bound for a zoned
+    TIMESTAMP that is of the kept kind stays (a zoned one as its naive
+    UTC time, a naive one as it is) and the other kind becomes None.
+    Output types are inferred, and Arrow infers a returned dict as a
+    struct, so nested values sit in lists and structs only."""
     if pa.types.is_timestamp(t):
         if t.tz is None:
             return None
-        return lambda v: (
-            v if getattr(v, "tzinfo", None) is None else v.astimezone(zone).replace(tzinfo=None)
-        )
+        if zoned:
+            return lambda v: (
+                None
+                if getattr(v, "tzinfo", None) is None
+                else v.astimezone(timezone.utc).replace(tzinfo=None)
+            )
+        return lambda v: v if getattr(v, "tzinfo", None) is None else None
     if pa.types.is_list(t):
-        f = _wall_fixer(t.value_type, zone)
+        f = _stamp_fixer(t.value_type, zoned)
         return None if f is None else (lambda v: [_fix(f, x) for x in v])
     if pa.types.is_struct(t):
-        fields = [(fld.name, f) for fld in t if (f := _wall_fixer(fld.type, zone))]
+        fields = [(fld.name, f) for fld in t if (f := _stamp_fixer(fld.type, zoned))]
         if not fields:
             return None
         return lambda v: {**v, **{n: _fix(f, v[n]) for n, f in fields if n in v}}
@@ -176,34 +182,41 @@ def _naive(t: pa.DataType) -> pa.DataType:
     return t
 
 
-def _localize(arr: pa.Array, t: pa.DataType, tz: str) -> pa.Array:
-    """``arr`` (of type ``_naive(t)``, built by ``pa.array``) as type
-    ``t``, every naive time bound for a TIMESTAMP read as wall-clock
-    time in time zone ``tz``."""
+def _localize(wall: pa.Array, utc: pa.Array, t: pa.DataType, tz: str) -> pa.Array:
+    """The arrays of type ``_naive(t)`` that ``_stamp_fixer`` values
+    built, merged as one array of type ``t``: a time from ``utc`` is
+    that instant, and one from ``wall`` is wall-clock time in time zone
+    ``tz``. The two share their shape, and a leaf is set in at most one
+    of them."""
     if pa.types.is_timestamp(t):
-        return arr if t.tz is None else pc.assume_timezone(arr, tz, ambiguous="latest").cast(t)
+        if t.tz is None:
+            return wall
+        local = pc.assume_timezone(wall, tz, ambiguous="latest").cast(t)
+        return pc.coalesce(utc.cast(t), local)
     if pa.types.is_list(t):
-        values = _localize(arr.values, t.value_type, tz)
-        return pa.ListArray.from_arrays(arr.offsets, values, type=t, mask=arr.is_null())
+        values = _localize(wall.values, utc.values, t.value_type, tz)
+        return pa.ListArray.from_arrays(wall.offsets, values, type=t, mask=wall.is_null())
     if pa.types.is_struct(t):
-        children = [_localize(arr.field(i), f.type, tz) for i, f in enumerate(t)]
-        return pa.StructArray.from_arrays(children, fields=list(t), mask=arr.is_null())
-    return arr
+        children = [_localize(wall.field(i), utc.field(i), f.type, tz) for i, f in enumerate(t)]
+        return pa.StructArray.from_arrays(children, fields=list(t), mask=wall.is_null())
+    return wall
 
 
 def _batch_builder(schema: T.StructType, tz: str):
     """The function that turns a list of ``format_data`` output dicts
     into one Arrow batch of ``schema``. A missing key is NULL, an
     integer stays exact, and a naive ``datetime`` bound for a TIMESTAMP
-    is read as wall-clock time in session time zone ``tz`` (a zoned one
-    keeps its instant), at the top level and inside arrays and structs
-    alike: pyarrow would store either one's wall clock as UTC."""
+    is read as wall-clock time in session time zone ``tz`` while a
+    zoned one keeps its exact instant, at the top level and inside
+    arrays and structs alike: pyarrow would store either one's wall
+    clock as UTC. Naive and zoned values are built as two arrays,
+    because a zoned instant in a repeated fall-back hour has no wall
+    clock that reads back as it."""
     arrow = to_arrow_schema(schema)
-    zone = _zone(tz)
     stamped = [
-        (i, f.name, wall, _naive(f.type))
+        (i, f.name, wall, _stamp_fixer(f.type, True), _naive(f.type))
         for i, f in enumerate(arrow)
-        if (wall := _wall_fixer(f.type, zone)) is not None
+        if (wall := _stamp_fixer(f.type, False)) is not None
     ]
 
     def build(rows: list[dict]) -> pa.RecordBatch:
@@ -211,9 +224,11 @@ def _batch_builder(schema: T.StructType, tz: str):
         if not stamped:
             return batch
         cols = batch.columns
-        for i, name, wall, naive in stamped:
-            walled = pa.array([_fix(wall, r.get(name)) for r in rows], naive)
-            cols[i] = _localize(walled, arrow.field(i).type, tz)
+        for i, name, wall, utc, naive in stamped:
+            values = [r.get(name) for r in rows]
+            walled = pa.array([_fix(wall, v) for v in values], naive)
+            instants = pa.array([_fix(utc, v) for v in values], naive)
+            cols[i] = _localize(walled, instants, arrow.field(i).type, tz)
         return pa.RecordBatch.from_arrays(cols, schema=arrow)
 
     return build
@@ -474,10 +489,16 @@ class IncrementalMigration(Migration):
     The watermark predicate is a plain Column filter, so it reaches
     the source scan as a pushed filter (parquet min/max skipping, a
     JDBC WHERE clause) — an incremental run reads the new slice, not
-    the table. The high watermark itself is one ``max()`` over the
-    target: on a partitioned warehouse that is a metadata-cheap agg;
-    callers who track the watermark externally can pass ``since=`` and
-    skip the target read entirely.
+    the table. The high watermark comes from the sink's metadata when
+    the sink can answer exactly: a sink with a ``max_from_metadata``
+    method (only ``ParquetConnector``) returns ``(value,)`` or None.
+    ``ParquetConnector`` reads the Parquet footers' row-group max
+    statistics on the driver, with no Spark job, for a local table of
+    plain data files read without options and an integer watermark
+    (byte/short/int/long). Every other sink, column type or layout
+    runs one ``max()`` aggregate over the target. Callers who track
+    the watermark externally can pass ``since=`` and skip the target
+    entirely.
 
     First run (target missing/empty) is a full load. The sink must
     also be readable (every file/JDBC/memory connector here is) unless
@@ -498,6 +519,10 @@ class IncrementalMigration(Migration):
         target is missing/empty (-> full load)."""
         if self.since is not None:
             return self.since
+        from_metadata = getattr(self.sink, "max_from_metadata", None)
+        answer = from_metadata(table_to, self.watermark_col) if from_metadata else None
+        if answer is not None:
+            return answer[0]
         try:
             tgt = self.sink.read(table_to)
         except (AnalysisException, KeyError, FileNotFoundError):

@@ -23,6 +23,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from d2d_spark.sources.base import local_path
+
 
 def filter_new_rows(
     incoming: DataFrame,
@@ -195,11 +197,12 @@ def write_mode(
 
 
 def _drop_stage_debris(spark, path: str) -> None:
-    if "://" not in path:
+    local = local_path(path)
+    if local is not None:
         import glob as _glob
         import shutil as _shutil
 
-        for stale in _glob.glob(_glob.escape(path) + ".__stage_*"):
+        for stale in _glob.glob(_glob.escape(local) + ".__stage_*"):
             _shutil.rmtree(stale, ignore_errors=True)
         return
     jvm = spark._jvm
@@ -218,15 +221,15 @@ def _drop_stage_debris(spark, path: str) -> None:
 
 def _swap_paths(spark, staging: str, path: str) -> None:
     """Replace `path` with `staging`, crash-safe on any Hadoop-visible
-    scheme (hdfs://, s3a://, file://) — not just the local FS.
+    scheme (hdfs://, s3a://, file:) — not just the local FS.
 
     Sequence: target -> .__bak, staging -> target, drop .__bak. At no
     point is the data unrecoverable: a crash before the second rename
     leaves the old data in .__bak (and restore is attempted on error);
     a crash after it leaves the new data live and only backup debris.
-    Local paths use os.replace (atomic dir rename); remote schemes use
-    the Hadoop FileSystem rename/delete that _target_exists already
-    resolves.
+    Local paths, plain or ``file:`` URIs (``sources.base.local_path``),
+    use os.replace (atomic dir rename); remote schemes use the Hadoop
+    FileSystem rename/delete that _target_exists already resolves.
 
     The backup basename is DOT-PREFIXED: when the target is a
     partition directory inside a table root (per-partition
@@ -240,9 +243,10 @@ def _swap_paths(spark, staging: str, path: str) -> None:
     backup = os.path.join(
         os.path.dirname(path) or ".", f".{os.path.basename(path)}.__bak_{suffix}"
     )
-    if "://" not in path:
+    if local_path(path) is not None:
         import shutil as _shutil
 
+        path, staging, backup = local_path(path), local_path(staging), local_path(backup)
         os.replace(path, backup)
         try:
             os.replace(staging, path)
@@ -277,9 +281,11 @@ def restore_swap_debris(spark, path: str) -> bool:
     write" branch runs after such a crash would silently reinitialize
     the table from one batch, stranding all accumulated data in the
     backup directory."""
-    if "://" not in path:
+    local = local_path(path)
+    if local is not None:
         import glob as _glob
 
+        path = local
         if os.path.exists(path):
             return False
         # escape the path: glob metacharacters ('[', '*', '?') in a
@@ -327,8 +333,9 @@ def restore_swap_debris(spark, path: str) -> bool:
 def _target_exists(spark, path: str) -> bool:
     """True iff the target path exists — via Hadoop FS so non-local
     schemes (hdfs://, s3a://) answer correctly too."""
-    if "://" not in path:
-        return os.path.exists(path)
+    local = local_path(path)
+    if local is not None:
+        return os.path.exists(local)
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)

@@ -70,6 +70,29 @@ def require_spark(spark: SparkSession | None) -> SparkSession:
     return active
 
 
+def local_path(path: str) -> str | None:
+    """The local filesystem path that ``path`` names, or None when only
+    the Hadoop FileSystem API reaches it (hdfs://, s3a://, ...).
+
+    A path with no scheme is local as it stands; a ``file:`` URI
+    (``file:/x``, ``file:///x``) is local at its path part. The scheme is
+    found the way Hadoop's ``Path`` finds it (a colon before the first
+    slash), so os-level calls and Spark's own reads and writes agree on
+    which table a path names."""
+    colon, slash = path.find(":"), path.find("/")
+    if colon == -1 or -1 < slash < colon:
+        return path
+    if path[:colon].lower() != "file":
+        return None
+    rest = path[colon + 1 :]
+    if rest.startswith("//"):
+        authority, _, tail = rest[2:].partition("/")
+        if authority:
+            return None
+        rest = "/" + tail
+    return rest
+
+
 def check_executor_local_root(spark: SparkSession, root: str, what: str) -> None:
     """Fail fast for sinks whose executors write with plain ``open()``:
     a remote scheme never works through open(), and on a multi-node

@@ -16,13 +16,14 @@ as ``backup=True``.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from d2d_spark.sources.base import Connector, require_spark
+from d2d_spark.sources.base import Connector, local_path, require_spark
 
 
 class FileConnector(Connector):
@@ -45,11 +46,12 @@ class FileConnector(Connector):
         ``<name><ext>``. Backups (``*.bak``) and dotfiles are never
         tables — read() appends the extension to whatever is returned
         here, so anything else would resolve to a phantom path."""
-        if not os.path.isdir(self.root):
+        root = local_path(self.root)
+        if root is None or not os.path.isdir(root):
             return []
         return sorted(
             name[: -len(self.ext)]
-            for name in os.listdir(self.root)
+            for name in os.listdir(root)
             if name.endswith(self.ext)
             and not name.startswith(".")
             and not name.endswith(".bak")
@@ -84,10 +86,11 @@ class FileConnector(Connector):
         create_index semantics); ``single_file`` coalesces to one
         part (only for small exports — it serializes the write)."""
         target = self.path(index)
-        if backup and os.path.exists(target):
+        local = local_path(target)
+        if backup and local is not None and os.path.exists(local):
             stamp = time.strftime("%Y%m%d%H%M%S")
-            bak = f"{target}.{stamp}.bak"
-            (shutil.copytree if os.path.isdir(target) else shutil.copy2)(target, bak)
+            bak = f"{local}.{stamp}.bak"
+            (shutil.copytree if os.path.isdir(local) else shutil.copy2)(local, bak)
         if single_file:
             df = df.coalesce(1)
         if mode in ("append", "overwrite"):
@@ -121,6 +124,131 @@ class ParquetConnector(FileConnector):
         # metadata-only count: Catalyst serves COUNT(*) from parquet
         # row-group footers without reading data pages
         return self.read(index).count()
+
+    def max_from_metadata(self, index: str, column: str) -> tuple | None:
+        """``max(column)`` from the table's Parquet footers, read on the
+        driver with pyarrow (no Spark job), as a one-element tuple: the
+        largest row-group max statistic, or ``(None,)`` when every value
+        is null or there are no rows. It answers only when the footers
+        alone are exact:
+
+        - the table is a local path (plain or ``file:``), read with no
+          connector options;
+        - it is one file, or a directory of data files with no
+          subdirectory (names starting ``_`` or ``.`` are skipped, as
+          Spark's file index skips them);
+        - ``column`` is a top-level column of the same type in every
+          file, physical INT32/INT64 with no logical type or a signed
+          INT one (what Spark reads as a byte/short/int/long), and
+          typed as an integer by the Spark schema in the footer where
+          Spark wrote one (Spark stores intervals as plain INT64/INT32);
+        - every non-empty row group has min/max statistics for it, or
+          its null count says it is all-null.
+
+        Anything else, an unreadable footer included, returns None, so
+        the caller runs the Spark aggregate and sees what it sees."""
+        path = local_path(self.path(index))
+        # Spark reads a dotted or back-quoted name as a field reference,
+        # not as the top-level column of that literal name
+        if self.options or path is None or "." in column or "`" in column:
+            return None
+        import pyarrow as pa
+
+        try:
+            return _footer_int_max(path, column)
+        except (OSError, pa.ArrowException):
+            return None
+
+
+def _parquet_data_files(path: str) -> list[str] | None:
+    """The files Spark reads for table ``path``, or None when that set
+    is not a flat list of data files (a missing path, a subdirectory
+    such as a partition, an in-flight copy, or no data file at all)."""
+    if os.path.isfile(path):
+        return [path]
+    if not os.path.isdir(path):
+        return None
+    files = []
+    for entry in os.scandir(path):
+        name = entry.name
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        if entry.is_dir() or name.startswith("_") or name.endswith("._COPYING_"):
+            return None
+        files.append(entry.path)
+    return files or None
+
+
+def _int_leaf(schema: "pq.ParquetSchema", column: str) -> int | None:
+    """Index of the leaf that is top-level column ``column`` when it is
+    a signed integer Spark resolves unambiguously, else None. Spark
+    matches names case-insensitively by default, so any other column
+    equal to ``column`` up to case also returns None."""
+    low = column.lower()
+    hits = [
+        i
+        for i in range(len(schema))
+        if (p := schema.column(i).path.lower()) == low or p.startswith(low + ".")
+    ]
+    if len(hits) != 1:
+        return None
+    c = schema.column(hits[0])
+    if c.path != column or c.name != column or c.max_repetition_level != 0:
+        return None
+    if c.physical_type not in ("INT32", "INT64"):
+        return None
+    logical = json.loads(c.logical_type.to_json())
+    if logical["Type"] == "None" or (logical["Type"] == "Int" and logical["isSigned"]):
+        return hits[0]
+    return None
+
+
+#: footer key under which Spark stores the schema it wrote a file with
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _spark_reads_as_int(md: "pq.FileMetaData", column: str) -> bool:
+    """False when the Spark schema in the footer, if there is one, types
+    ``column`` as anything but byte/short/int/long. Spark stores its
+    interval types as plain INT32/INT64 and reads them back as
+    intervals from this schema."""
+    raw = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return True
+    return any(
+        f["name"] == column and f["type"] in ("byte", "short", "integer", "long")
+        for f in json.loads(raw).get("fields", [])
+    )
+
+
+def _footer_int_max(path: str, column: str) -> tuple | None:
+    """``ParquetConnector.max_from_metadata`` on local table ``path``."""
+    import pyarrow.parquet as pq
+
+    files = _parquet_data_files(path)
+    if files is None:
+        return None
+    kind, best = None, None
+    for f in files:
+        md = pq.read_metadata(f)
+        leaf = _int_leaf(md.schema, column)
+        if leaf is None or not _spark_reads_as_int(md, column):
+            return None
+        c = md.schema.column(leaf)
+        if kind is None:
+            kind = (c.physical_type, c.logical_type.to_json())
+        elif kind != (c.physical_type, c.logical_type.to_json()):
+            return None
+        for r in range(md.num_row_groups):
+            rg = md.row_group(r)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(leaf).statistics
+            if st is not None and st.has_min_max:
+                best = st.max if best is None else max(best, st.max)
+            elif st is None or not st.has_null_count or st.null_count != rg.num_rows:
+                return None
+    return (best,)
 
 
 class CsvConnector(FileConnector):

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from d2d_spark.sources.base import local_path
+
 
 def file_stream(
     spark: SparkSession,
@@ -153,25 +155,11 @@ def sync_with_mode(
     return _run_foreach_batch(df, handle, checkpoint_path)
 
 
-def _local_path(p: str) -> str | None:
-    """Local filesystem path for ``p``, or None when it lives on a
-    filesystem os.path cannot probe (hdfs://, s3a://, ...) — guards
-    using this are best-effort there rather than misfiring: treating a
-    URI string as a relative path would call a legitimately resumed
-    'file:/ckpt' checkpoint fresh and refuse a valid run."""
-    from urllib.parse import urlparse
-
-    scheme = urlparse(p).scheme
-    if scheme in ("", "file"):
-        return urlparse(p).path if scheme else p
-    return None
-
-
 def _checkpoint_is_fresh(checkpoint_path: str) -> bool | None:
     """Whether the checkpoint has never committed a batch (no
     ``offsets/`` yet); None when it is not on a local filesystem, where
     the lifetime guards stand down rather than guess."""
-    local = _local_path(checkpoint_path)
+    local = local_path(checkpoint_path)
     if local is None:
         return None
     return not os.path.isdir(os.path.join(local, "offsets"))
@@ -184,7 +172,7 @@ def _refuse_fresh_checkpoint_on_used_target(
     the checkpoint, so a deleted/rebuilt checkpoint restarts them at 0
     and would silently overwrite historical ``batch_id=N`` partitions
     while later ones survive — duplicates and lost provenance."""
-    target_local = _local_path(target_path)
+    target_local = local_path(target_path)
     target_has_batches = (
         target_local is not None
         and os.path.isdir(target_local)
@@ -227,7 +215,7 @@ class _BatchKeyedState:
 
     def __init__(self, state_dir: str, suffix: str = "", keep_last: int | None = None):
         self._dir = state_dir
-        self._local = _local_path(state_dir)
+        self._local = local_path(state_dir)
         self._suffix = suffix
         self._keep_last = keep_last
         self._pat = re.compile(rf"^{_STATE_PREFIX}(\d+){re.escape(suffix)}$")

@@ -13,6 +13,7 @@ from decimal import Decimal
 import pytest
 
 from d2d_spark.migrate import apply_format_data, format_data_with_quarantine
+from tests.conftest import count_jobs
 
 BIG = 2**53 + 1
 
@@ -223,19 +224,11 @@ def test_driver_sample_reads_one_partition_in_one_task(spark):
     """Inference samples the first rows in a single task, however many
     partitions the input has (an Arrow collect of a bare limit would run
     a task per partition plus a shuffle)."""
-    sc = spark.sparkContext
     df = spark.range(0, 1600, 1, 16)
-    sc.setJobGroup("format_data_sample", "format_data sample")
-    try:
+    with count_jobs(spark) as jobs:
         apply_format_data(df, lambda d: {"id": d["id"]}, sample=10)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    tracker = sc.statusTracker()
-    stages = [
-        s
-        for j in tracker.getJobIdsForGroup("format_data_sample")
-        for s in tracker.getJobInfo(j).stageIds
-    ]
+    tracker = spark.sparkContext.statusTracker()
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
     assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
 
 
@@ -276,6 +269,43 @@ def test_nested_timestamps_follow_the_session_time_zone(spark):
         z = int(zoned.timestamp())  # 2020-01-01 15:00Z
         n = int(datetime.datetime(2020, 7, 1, 14, tzinfo=datetime.timezone.utc).timestamp())
         want = {"top": n, "arr_z": [z, None], "arr_n": n, "nested": z, "st_z": z, "st_n": n, "inner_z": z}
+        assert [r.asDict() for r in got] == [want, want]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_zoned_instant_in_a_repeated_fall_back_hour_is_kept(spark):
+    """A zoned datetime keeps its exact instant even when it falls in
+    the first of the two repeated hours of a fall-back night in the
+    session time zone, at the top level, in a list and in a struct. A
+    naive datetime in that hour is still read as the later of the two
+    (EST)."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        utc = datetime.timezone.utc
+        first = datetime.datetime(2020, 11, 1, 5, 30, tzinfo=utc)  # 01:30 EDT
+        second = datetime.datetime(2020, 11, 1, 6, 30, tzinfo=utc)  # 01:30 EST
+        naive = datetime.datetime(2020, 11, 1, 1, 30)
+
+        def fn(d):
+            return {
+                "id": d["id"],
+                "top": first,
+                "arr": [first, second, naive],
+                "st": {"z": first, "n": naive},
+            }
+
+        out = apply_format_data(spark.range(0, 2, 1, 2), fn)
+        got = out.selectExpr(
+            "unix_seconds(top) AS top",
+            "transform(arr, x -> unix_seconds(x)) AS arr",
+            "unix_seconds(st.z) AS st_z",
+            "unix_seconds(st.n) AS st_n",
+        ).collect()
+        a, b = int(first.timestamp()), int(second.timestamp())
+        want = {"top": a, "arr": [a, b, b], "st_z": a, "st_n": b}
         assert [r.asDict() for r in got] == [want, want]
     finally:
         spark.conf.set(key, old)
