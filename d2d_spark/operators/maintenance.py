@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d2d_spark.operators.writes import _swap_paths
-from d2d_spark.sources.base import require_spark
+from d2d_spark.sources.base import local_path, require_spark
 
 
 def data_file_stats(spark: SparkSession, path: str) -> tuple[int, int]:
@@ -335,7 +335,7 @@ def cluster_ranges(spark: SparkSession, path: str, column: str) -> list[tuple]:
     import pyarrow.parquet as pq
 
     out = []
-    root = path[len("file://"):] if path.startswith("file://") else path
+    root = local_path(path) or path  # plain or file: URI
     for name in sorted(os.listdir(root)):
         if not name.endswith(".parquet") or name.startswith(("_", ".")):
             continue
@@ -375,7 +375,7 @@ def read_pruned(
 
     if lo is None and hi is None:
         raise ValueError("read_pruned needs at least one of lo/hi")
-    root = path[len("file://"):] if path.startswith("file://") else path
+    root = local_path(path) or path  # plain or file: URI
     keep: list[str] = []
     total = 0
     for name in sorted(os.listdir(root)):

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from d2d_spark.sources.base import local_path
+from d2d_spark.sources.files import load_table
 
 
 def filter_new_rows(
@@ -44,7 +45,8 @@ def filter_new_rows(
     handing a pushdown-pruned scan of just those columns. No broadcast
     hint: an explicit hint is honored regardless of size (AQE does NOT
     demote it), which would OOM on a billion-key target — size-based
-    selection is Catalyst's call."""
+    selection is Catalyst's call. The probe keeps duplicate target
+    keys: a left-anti join only asks whether a key exists."""
     if order_col is not None:
         from pyspark.sql import Window
 
@@ -56,8 +58,7 @@ def filter_new_rows(
         )
     else:
         incoming = incoming.dropDuplicates(pks)
-    probe = target_keys.select(*pks).dropDuplicates(pks)
-    return incoming.join(probe, on=pks, how="left_anti")
+    return incoming.join(target_keys.select(*pks), on=pks, how="left_anti")
 
 
 def upsert_rows(
@@ -72,7 +73,9 @@ def upsert_rows(
     A distributed batch has no inherent order — pass ``order_col``
     to pin the winner (max value per key); without it the choice
     among incoming duplicates is an explicit arbitrary-but-single
-    pick (dropDuplicates)."""
+    pick (dropDuplicates). The anti-join probe takes the raw incoming
+    keys: it only asks whether a key exists, so deduplicating them
+    would only add a shuffle."""
     if order_col is not None:
         from pyspark.sql import Window
 
@@ -84,7 +87,7 @@ def upsert_rows(
         )
     else:
         inc = incoming.dropDuplicates(pks)
-    kept = target.join(inc.select(*pks), on=pks, how="left_anti")
+    kept = target.join(incoming.select(*pks), on=pks, how="left_anti")
     return kept.unionByName(inc, allowMissingColumns=False)
 
 
@@ -140,7 +143,11 @@ def write_mode(
     production lake this maps to Delta/Iceberg MERGE; the dataflow and
     semantics are identical. ``options`` (header/sep/...) apply to
     BOTH the target read and every write — a keyed CSV merge that
-    read the target with default options would mis-parse it.
+    read the target with default options would mis-parse it. A
+    Parquet target read with no options takes its schema from the
+    first file's footer (``sources.files.load_table``) instead of Spark's
+    schema-inference job, and falls back to inference where the footer
+    cannot say it exactly.
     """
     options = options or {}
 
@@ -168,10 +175,7 @@ def write_mode(
     if not _target_exists(spark, path) and not restore_swap_debris(spark, path):
         _writer(df).mode("overwrite").save(path)
         return
-    reader = spark.read.format(fmt)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    target = reader.load(path)
+    target = load_table(spark, fmt, path, options)
     if mode == "ignore":
         out = target.unionByName(filter_new_rows(df, target, pks, order_col))
     elif mode in ("replace", "upsert"):

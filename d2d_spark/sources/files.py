@@ -18,12 +18,27 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from d2d_spark.sources.base import Connector, local_path, require_spark
+
+
+def load_table(spark: SparkSession, fmt: str, path: str, options: dict[str, str]) -> DataFrame:
+    """Table ``path`` read as ``fmt`` with ``options``. A Parquet read
+    with no options takes its schema from a file footer where it gives
+    it exactly (:func:`footer_schema`), so Spark runs no schema job."""
+    reader = spark.read.format(fmt)
+    schema = footer_schema(spark, path) if fmt == "parquet" and not options else None
+    if schema is not None:
+        reader = reader.schema(schema)
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load(path)
 
 
 class FileConnector(Connector):
@@ -63,10 +78,7 @@ class FileConnector(Connector):
         return {**self.options, **{k: str(v) for k, v in kw.items()}}
 
     def read(self, index: str, **kw) -> DataFrame:
-        reader = self.spark.read.format(self.fmt)
-        for k, v in self._read_options(**kw).items():
-            reader = reader.option(k, v)
-        return reader.load(self.path(index))
+        return load_table(self.spark, self.fmt, self.path(index), self._read_options(**kw))
 
     # -- write ---------------------------------------------------------
     def write(
@@ -117,6 +129,12 @@ class FileConnector(Connector):
 
 
 class ParquetConnector(FileConnector):
+    """Parquet tables. A read with no connector options and no read
+    keywords takes its schema from the footer Spark's inference would
+    read, on the driver (:func:`footer_schema`), instead of running
+    Spark's one-task schema-inference job; where it cannot say the schema
+    exactly, the read infers it as Spark always does."""
+
     fmt = "parquet"
     ext = ".parquet"
 
@@ -160,23 +178,108 @@ class ParquetConnector(FileConnector):
             return None
 
 
-def _parquet_data_files(path: str) -> list[str] | None:
-    """The files Spark reads for table ``path``, or None when that set
-    is not a flat list of data files (a missing path, a subdirectory
-    such as a partition, an in-flight copy, or no data file at all)."""
+#: footer key under which Spark stores the schema it wrote a file with
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+#: characters that make Spark read a path as a glob pattern (Hadoop's
+#: ``SparkHadoopUtil.isGlobPath``), so the literal file is not what it reads
+_GLOB_CHARS = frozenset("{}[]*?\\")
+#: Parquet summary files: Spark's file index lists names starting with
+#: these, and its schema inference prefers them to the data files
+_SUMMARY_PREFIXES = ("_common_metadata", "_metadata")
+#: file names that Hadoop's path string keeps as they are, so that
+#: sorting them here orders them as Spark's file index does
+_PLAIN_NAME = re.compile(r"[A-Za-z0-9._=+-]+")
+
+
+def _parquet_data_files(path: str) -> tuple[list[str], bool] | None:
+    """The data files Spark reads for table ``path`` and whether the
+    table also holds a summary file (``_metadata``/``_common_metadata``),
+    or None when that set is not a flat list of data files (a missing
+    or glob path, a hidden single file, a subdirectory such as a
+    partition, an in-flight copy, or no data file at all)."""
+    if _GLOB_CHARS.intersection(path):
+        return None
     if os.path.isfile(path):
-        return [path]
+        return None if os.path.basename(path).startswith(("_", ".")) else ([path], False)
     if not os.path.isdir(path):
         return None
-    files = []
+    files, summary = [], False
     for entry in os.scandir(path):
         name = entry.name
+        if name.startswith(_SUMMARY_PREFIXES):
+            summary = True
+            continue
         if name.startswith(".") or (name.startswith("_") and "=" not in name):
             continue
         if entry.is_dir() or name.startswith("_") or name.endswith("._COPYING_"):
             return None
         files.append(entry.path)
-    return files or None
+    return (files, summary) if files else None
+
+
+def footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark's Parquet schema inference gives the local
+    table ``path`` (a read then marks every column nullable), read from
+    one footer on the driver with no Spark job, or None when that
+    footer alone does not give it exactly.
+
+    Without schema merging, Spark infers a table's schema from the
+    first data file by sorted path: the Spark schema stored under its
+    row-metadata key if there is one, else its Parquet schema converted
+    by ``ParquetToSparkSchemaConverter``. This reads the same file and
+    answers the same way, converting over py4j with Spark's own
+    converter under the session's binary-as-string, INT96,
+    timestamp-NTZ, nanos and unknown-annotation settings. One footer is
+    read however many files the table holds.
+
+    Anything else returns None, so the caller lets Spark infer and
+    sees what it sees: a non-local path, a session that merges schemas,
+    a summary file, a subdirectory or partition, a file name whose
+    sort order Spark might see differently, an unreadable footer, any
+    converter or py4j error (a TIMESTAMP(NANOS) column, for one), or
+    two columns whose names differ only in case."""
+    local = local_path(path)
+    if local is None:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        listed = _parquet_data_files(local)
+        if listed is None or listed[1] or not all(_PLAIN_NAME.fullmatch(os.path.basename(f)) for f in listed[0]):
+            return None
+        if spark.conf.get("spark.sql.parquet.mergeSchema").strip().lower() != "false":
+            return None
+        first = min(listed[0])
+        raw = (pq.read_metadata(first).metadata or {}).get(_SPARK_ROW_METADATA)
+    except (OSError, pa.ArrowException):
+        return None
+    try:
+        schema = StructType.fromJson(json.loads(raw)) if raw is not None else _convert_footer(spark, first)
+    except Exception:
+        return None
+    if schema is None or len({f.name.lower() for f in schema.fields}) < len(schema.fields):
+        return None
+    return schema
+
+
+def _convert_footer(spark: SparkSession, file: str) -> StructType | None:
+    """``file``'s Parquet schema as Spark's schema inference converts
+    it: ``ParquetToSparkSchemaConverter`` built from the session's
+    ``SQLConf``. Inference ignores the session's variant-annotation
+    setting, so a session that changed it returns None."""
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = pkg.ParquetToSparkSchemaConverter(spark._jsparkSession.sessionState().conf())
+    if converter.ignoreVariantAnnotation():
+        return None
+    hadoop_file = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        jvm.org.apache.hadoop.fs.Path("file:" + os.path.abspath(file)), spark._jsc.hadoopConfiguration()
+    )
+    footer = pkg.ParquetFooterReader.readFooter(
+        hadoop_file, jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+    )
+    return StructType.fromJson(json.loads(converter.convert(footer.getFileMetaData().getSchema()).json()))
 
 
 def _int_leaf(schema: "pq.ParquetSchema", column: str) -> int | None:
@@ -203,10 +306,6 @@ def _int_leaf(schema: "pq.ParquetSchema", column: str) -> int | None:
     return None
 
 
-#: footer key under which Spark stores the schema it wrote a file with
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
 def _spark_reads_as_int(md: "pq.FileMetaData", column: str) -> bool:
     """False when the Spark schema in the footer, if there is one, types
     ``column`` as anything but byte/short/int/long. Spark stores its
@@ -225,11 +324,11 @@ def _footer_int_max(path: str, column: str) -> tuple | None:
     """``ParquetConnector.max_from_metadata`` on local table ``path``."""
     import pyarrow.parquet as pq
 
-    files = _parquet_data_files(path)
-    if files is None:
+    listed = _parquet_data_files(path)
+    if listed is None:
         return None
     kind, best = None, None
-    for f in files:
+    for f in listed[0]:
         md = pq.read_metadata(f)
         leaf = _int_leaf(md.schema, column)
         if leaf is None or not _spark_reads_as_int(md, column):

@@ -299,3 +299,16 @@ def test_read_pruned_equals_full_scan(spark, tmp_path):
     os.makedirs(str(tmp_path / "empty_dir"))
     with pt.raises(ValueError, match="no parquet data files"):
         read_pruned(spark, str(tmp_path / "empty_dir"), "id", lo=1)
+
+
+@pytest.mark.parametrize("scheme", ["file:", "file://"])
+def test_footer_sweeps_accept_a_file_uri(spark, tmp_path, scheme):
+    """``cluster_ranges`` and ``read_pruned`` resolve a ``file:`` URI to
+    the same local table as its plain path."""
+    from d2d_spark.operators.maintenance import cluster_ranges, read_pruned, write_clustered
+
+    path = str(tmp_path / "clustered")
+    write_clustered(spark.range(0, 1000).selectExpr("id"), path, ["id"], n_files=4)
+    assert cluster_ranges(spark, scheme + path, "id") == cluster_ranges(spark, path, "id")
+    got = sorted(r.id for r in read_pruned(spark, scheme + path, "id", lo=100, hi=120).collect())
+    assert got == list(range(100, 121))

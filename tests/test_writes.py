@@ -197,6 +197,79 @@ def test_upsert_order_col_pins_last_wins(spark):
     assert all(r["count"] == 1 for r in n)
 
 
+_PROBE_TARGET = [(1, "t1", 0), (2, "t2", 0), (None, "tn", 0), (4, "t4", 0), (4, "t4b", 0)]
+_PROBE_BATCH = [
+    (1, "a", 1), (1, "b", 2), (3, "c", 1), (3, "d", 3), (None, "n1", 1), (None, "n2", 2), (5, "e", 1),
+]
+
+
+@pytest.mark.parametrize("order_col", [None, "seq"])
+def test_keyed_probes_with_duplicate_and_null_keys(spark, order_col):
+    """The anti-join probes take raw keys: duplicate keys in the batch
+    or the target change nothing, and a NULL key matches nothing. The
+    batch's own duplicates still collapse to one row per key, the
+    ``order_col`` winner where one is given."""
+    from d2d_spark.operators.writes import filter_new_rows, upsert_rows
+
+    schema = "id long, v string, seq int"
+    target = spark.createDataFrame(_PROBE_TARGET, schema)
+    batch = spark.createDataFrame(_PROBE_BATCH, schema).repartition(3)
+
+    def pairs(df):
+        return sorted(((r.id, r.v) for r in df.collect()), key=repr)
+
+    up = pairs(upsert_rows(target, batch, ["id"], order_col))
+    new = pairs(filter_new_rows(batch, target, ["id"], order_col))
+    kept = [(2, "t2"), (None, "tn"), (4, "t4"), (4, "t4b")]
+    if order_col:
+        assert up == sorted(kept + [(1, "b"), (3, "d"), (5, "e"), (None, "n2")], key=repr)
+        assert new == sorted([(3, "c"), (5, "e"), (None, "n1")], key=repr)
+        return
+    # without order_col any one row per batch key may win
+    choices = {}
+    for k, v, _ in _PROBE_BATCH:
+        choices.setdefault(k, set()).add(v)
+    won = [p for p in up if p not in kept]
+    assert [p for p in up if p in kept] == sorted(kept, key=repr)
+    assert sorted(map(repr, (k for k, _ in won))) == sorted(map(repr, [1, 3, 5, None]))
+    assert sorted(map(repr, (k for k, _ in new))) == sorted(map(repr, [3, 5, None]))
+    assert all(v in choices[k] for k, v in won + new)
+
+
+def test_unsampled_key_message(spark):
+    """The subset test on each row changes nothing in the error, in
+    either bridge."""
+    import re
+
+    from d2d_spark.migrate import (
+        _refuse_unsampled_keys,
+        apply_format_data,
+        format_data_with_quarantine,
+    )
+
+    cols = frozenset({"a", "b"})
+    _refuse_unsampled_keys([{"a": 1}, {"a": 1, "b": 2}, {}], cols, 5)
+    with pytest.raises(ValueError) as e:
+        _refuse_unsampled_keys([{"a": 1}, {"z": 1, "b": 2}, {"y": 0}], cols, 5)
+    assert str(e.value) == (
+        "format_data emitted keys absent from the sampled schema: ['y', 'z']; "
+        "emit them in the first 5 rows or raise the sample size"
+    )
+    df = spark.range(8).coalesce(1)
+
+    def fn(d):
+        return {"id": d["id"], **({"late": 1} if d["id"] >= 4 else {})}
+
+    message = re.escape(
+        "format_data emitted keys absent from the sampled schema: ['late']; "
+        "emit them in the first 2 rows or raise the sample size"
+    )
+    with pytest.raises(Exception, match=message):
+        apply_format_data(df, fn, sample=2).collect()
+    with pytest.raises(Exception, match=message):
+        format_data_with_quarantine(df, fn, sample=2)[0].collect()
+
+
 def test_format_data_unseen_key_raises(spark):
     """Regression (r1 ask #8 / r2 verdict #6): a transform emitting a
     key the sampled schema never saw must raise, not silently drop the
